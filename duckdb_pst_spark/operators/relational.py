@@ -3498,7 +3498,7 @@ KEY_STRETCH_ROUNDS = 1024
 def q_key_stretch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Iterated polynomial key stretching over every lineitem key, plus
     a corpus checksum: each l_orderkey is folded through
-    {KEY_STRETCH_ROUNDS} rounds of (acc*31 + i) % P — the
+    KEY_STRETCH_ROUNDS (1024) rounds of (acc*31 + i) % P — the
     key-hardening shape (PBKDF-style) a pipeline uses to derive
     non-invertible record fingerprints — and the stretched keys are
     summed into one portable corpus digest. Pure 64-bit integer

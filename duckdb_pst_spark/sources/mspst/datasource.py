@@ -5,18 +5,38 @@ Maps the reference's scan architecture onto the DataSource API
 (/root/reference/src/table_function.cpp):
 
 - glob expansion at plan time (A1, table_function.cpp:48-61)
-- one InputPartition per file (A3/A4 partition planning — a PST file is
-  the natural parallel unit; node-range splits within a file are a
-  follow-up, matching the reference's ``partition_size`` buckets)
-- per-task ``PstArchive`` instance — the non-thread-safe-handle rule
+- byte-balanced scan partitions (A3/A4): the driver crawls every file's
+  NBT, lays the message nodes out in (file, nid) order and cuts that
+  list into contiguous runs of near-equal estimated bytes, one run per
+  core, or more when ``partition_size`` (a per-task row cap, as in the
+  reference) calls for it. A partition is a tuple of (file, nids)
+  entries, so one task may finish one archive and start the next; a
+  big archive splits across tasks and small ones share a task
+  (``PstReader.plan``)
+- per-entry ``PstArchive`` instance — the non-thread-safe-handle rule
   (A10, function_state.cpp:59-71)
 - named scan parameters (A21): ``read_body_size_bytes``,
   ``read_attachment_body``, ``read_limit``
 - class filter applied at read (A5); Catalyst prunes columns on top (A7)
+
+Why one task per core: every Python task costs its worker about
+0.15-0.2 CPU-s before it reads a byte (pyspark invalidates the import
+caches per task, and every zipimporter re-reads pyspark.zip), and each
+task of a partitioned landing opens its own parquet writer per output
+directory. Measured on a 4-vCPU VM, a 13-task scan that decodes nothing
+costs 4.6-5.1 CPU-s against 0.8-1.1 CPU-s for one task. Planning by
+file count also let one 4096-row task carry 238 of a corpus's 385 MiB,
+so the whole job waited on it; equal bytes per task end the wave
+together.
 """
 
 from __future__ import annotations
 
+import bisect
+import itertools
+import math
+import operator
+import os
 import sys
 
 from pyspark.sql.datasource import (
@@ -227,6 +247,31 @@ def table_schema(table: str) -> StructType:
     return StructType(MESSAGE_SCHEMA.fields + _EXTRAS.get(table, []))
 
 
+def balanced_cuts(weights: list[float], parts: int, cap: int | None = None) -> list[int]:
+    """Boundaries ``0 = c0 < c1 < ... < c_parts = len(weights)`` cutting
+    the weights into ``parts`` contiguous, non-empty runs of near-equal
+    sum, none longer than ``cap`` items (the caller keeps ``parts <=
+    len(weights) <= parts * cap``). Each cut lands where the running sum
+    is nearest an equal share of the weight not yet planned, then is
+    clamped so that every later run can stay non-empty and within the
+    cap."""
+    n = len(weights)
+    cum = list(itertools.accumulate(weights, initial=0.0))
+    cuts = [0]
+    for left in range(parts, 1, -1):  # runs still to cut, this one included
+        s = cuts[-1]
+        target = cum[s] + (cum[n] - cum[s]) / left
+        e = bisect.bisect_left(cum, target, s + 1, n)
+        if e > s + 1 and target - cum[e - 1] <= cum[e] - target:
+            e -= 1
+        lo, hi = s + 1, n - (left - 1)
+        if cap is not None:
+            lo, hi = max(lo, n - (left - 1) * cap), min(hi, s + cap)
+        cuts.append(min(max(e, lo), hi))
+    cuts.append(n)
+    return cuts
+
+
 CLASS_FILTER = {
     "notes": "IPM.Note",
     "contacts": "IPM.Contact",
@@ -297,42 +342,85 @@ class PstReader(DataSourceReader):
         self.columns = frozenset(self.fields) if options.get("columns") else None
 
     def partitions(self):
-        """Bind-time planning (A3/A4, table_function.cpp:191-239): crawl
-        each file's NBT on the driver and bucket message node-ids into
-        partitions of ``partition_size`` (reference default 4096,
-        table_function.hpp:29-30) — one Spark task per bucket, with the
-        node list carried in the partition like the reference's
-        ``PSTInputPartition.nodes``. Folders stay one partition per file
-        (16-ish rows). With ``read_limit``, planning stops once enough
-        nodes are covered (A6: the crawl itself is cut short). Paths may
-        be local globs or remote URLs — http(s) range reads / pyarrow
-        filesystems (A2, duckdb_filesystem.cpp:12-36)."""
+        """Bind-time planning (A3/A4, table_function.cpp:191-239) over
+        the expanded glob: see ``plan``. Paths may be local globs or
+        remote URLs — http(s) range reads / pyarrow filesystems (A2,
+        duckdb_filesystem.cpp:12-36)."""
         from duckdb_pst_spark.sources.mspst.fsio import expand_paths
 
-        files = expand_paths(self.path) if self.path else []
-        if not files:
-            return [InputPartition((None, None))]
+        return self.plan(expand_paths(self.path) if self.path else [])
+
+    def plan(self, files: list[str]) -> list[InputPartition]:
+        """Byte-balanced scan partitions over an explicit file list.
+
+        The driver crawls each file's NBT and lays the message nodes out
+        in (file, nid) order, as the reference does before bucketing
+        them. That list is cut into ``max(ceil(rows / partition_size),
+        min(cores, files))`` contiguous runs of near-equal estimated
+        bytes, where a run's estimate is its file's size times the run's
+        share of that file's messages. A run never holds more than
+        ``partition_size`` rows, so the option keeps the reference's
+        meaning as a row cap (default 4096, table_function.hpp:29-30).
+        A partition is a tuple of (file, nids) entries: a run may start
+        in one archive and end in another, big archives split across
+        tasks, small ones share a task. The folders table has a dozen-odd
+        rows per file and is never split within a file: each file is one
+        unit weighted by its size. With ``read_limit`` the crawl stops
+        once enough message nodes are planned (A6) and only the first
+        ``read_limit`` nodes are cut. An unreadable file is logged and
+        skipped (A18, table_function.cpp:228-235).
+
+        Why one task per core rather than one per file or per bucket:
+        each Python task costs its worker about 0.15-0.2 CPU-s before it
+        reads a byte, so a 13-task plan of a 12-archive corpus paid 4-5
+        CPU-s of task overhead where one task pays about 1 (4-vCPU VM,
+        module docstring); equal estimated bytes per task end the last
+        wave together instead of waiting on one archive's 4096-row task."""
         psize = int(self.options_partition_size)
         limit = int(self.read_limit) if self.read_limit is not None else None
+        crawled = self._crawl(files, limit)
+        folders = self.table == "folders"
+        if folders:
+            units = [(f, None) for f, _size, _nids in crawled]
+            weights = [size for _f, size, _nids in crawled]
+            rows = sum(len(nids) for _f, _size, nids in crawled)
+        else:
+            units, weights = [], []
+            for f, size, nids in crawled:
+                if nids:
+                    units.extend((f, nid) for nid in nids)
+                    weights.extend([size / len(nids)] * len(nids))
+            units, weights = units[:limit], weights[:limit]
+            rows = len(units)
+        if not units:
+            return [InputPartition(((None, None),))]  # nothing to read
+        cores = len(os.sched_getaffinity(0))
+        n_parts = min(len(units), max(math.ceil(rows / psize), min(cores, len(crawled))))
+        cuts = balanced_cuts(weights, n_parts, None if folders else psize)
+        return [
+            InputPartition(tuple(
+                (f, None if folders else [nid for _f, nid in run])
+                for f, run in itertools.groupby(units[a:b], key=operator.itemgetter(0))
+            ))
+            for a, b in zip(cuts, cuts[1:])
+        ]
 
-        def plan_one(f):
-            """(file, message nids | None-for-folders), or None when the
-            file is unreadable — A18 error tolerance
-            (table_function.cpp:228-235): logged and skipped, not fatal."""
-            from duckdb_pst_spark.sources.mspst.ndb import PstFile, nid_type
+    def _crawl(self, files: list[str], limit: int | None) -> list[tuple]:
+        """(file, file bytes, sorted message nids — folder nids for the
+        folders table) per readable file, in file order."""
+        from duckdb_pst_spark.sources.mspst.ndb import (
+            NID_TYPE_NORMAL_FOLDER,
+            NID_TYPE_NORMAL_MESSAGE,
+            PstFile,
+            nid_type,
+        )
 
+        want = NID_TYPE_NORMAL_FOLDER if self.table == "folders" else NID_TYPE_NORMAL_MESSAGE
+
+        def crawl_one(f):
             try:
                 with PstFile(f) as p:
-                    if self.table == "folders":
-                        # probe the full NBT crawl so an unreadable or
-                        # truncated file is dropped at plan time
-                        for _ in p.nbt:
-                            pass
-                        return (f, None)
-                    return (
-                        f,
-                        sorted(n for n in p.nbt if nid_type(n) == 0x04),
-                    )
+                    return (f, p.ib_file_eof, sorted(n for n in p.nbt if nid_type(n) == want))
             except Exception as exc:
                 print(f"pst: skipping unreadable file {f}: {exc}", file=sys.stderr)
                 return None
@@ -345,77 +433,24 @@ class PstReader(DataSourceReader):
             from concurrent.futures import ThreadPoolExecutor
 
             with ThreadPoolExecutor(min(32, len(files))) as ex:
-                planned_files = [r for r in ex.map(plan_one, files) if r is not None]
-        else:
-            # A6: read_limit stops the crawl as soon as enough rows are
-            # planned — serial keeps the early stop exact.
-            planned_files = []
-            seen = 0
-            for f in files:
-                r = plan_one(f)
-                if r is None:
-                    continue
-                planned_files.append(r)
-                if r[1] is not None:
-                    seen += len(r[1])
-                    if limit is not None and seen >= limit:
-                        break
-
-        # A4 bucketing, with small files PACKED into shared partitions: a
-        # Python DataSource task costs ~tens of ms to launch, so one task
-        # per tiny archive (e.g. 167 fixture files x 12 rows) drowns in
-        # startup overhead. Each partition is a tuple of (file, nids)
-        # entries — flushed when it reaches partition_size rows OR the
-        # per-partition file cap (sized so task count stays ~3x cores for
-        # full parallelism). Big files still split at psize rows exactly
-        # as the reference does; one handle per entry per task (A10).
-        import math
-        import os as _os
-
-        target_tasks = 3 * (_os.cpu_count() or 8)
-        max_files = max(1, math.ceil(len(planned_files) / target_tasks))
-        out = []
-        planned = 0
-        entries: list = []
-        entry_rows = 0
-
-        def flush():
-            nonlocal entries, entry_rows
-            if entries:
-                out.append(InputPartition(tuple(entries)))
-                entries, entry_rows = [], 0
-
-        EST_FOLDER_ROWS = 16
-        for f, nids in planned_files:
-            if nids is None:  # folders: whole file is one entry
-                entries.append((f, None))
-                entry_rows += EST_FOLDER_ROWS
-                if entry_rows >= psize or len(entries) >= max_files:
-                    flush()
+                return [r for r in ex.map(crawl_one, files) if r is not None]
+        # A6: read_limit stops the crawl as soon as enough message nodes
+        # are planned — serial keeps the early stop exact.
+        out, seen = [], 0
+        for f in files:
+            r = crawl_one(f)
+            if r is None:
                 continue
-            if limit is not None:
-                nids = nids[: max(limit - planned, 0)]
-            planned += len(nids)
-            i = 0
-            while len(nids) - i >= psize:  # full buckets: standalone
-                flush()
-                out.append(InputPartition(((f, nids[i : i + psize]),)))
-                i += psize
-            rest = nids[i:]
-            if rest:
-                entries.append((f, rest))
-                entry_rows += len(rest)
-                if entry_rows >= psize or len(entries) >= max_files:
-                    flush()
-            if limit is not None and planned >= limit:
-                break
-        flush()
-        return out or [InputPartition(((None, None),))]
+            out.append(r)
+            if self.table != "folders":
+                seen += len(r[2])
+                if limit is not None and seen >= limit:
+                    break
+        return out
 
     def read(self, partition):
-        # One task reads a pack of (file, nids) entries sequentially —
-        # amortizes the Python-worker launch across small files; each
-        # entry still gets its own archive handle (A10, never shared).
+        # One task reads its run of (file, nids) entries in order; each
+        # entry gets its own archive handle (A10, never shared).
         for entry in partition.value:
             yield from self._read_entry(entry)
 
@@ -477,24 +512,24 @@ class PstReader(DataSourceReader):
 
 class PstStreamReader(DataSourceStreamReader):
     """Streaming PST ingest: ``spark.readStream.format("pst")`` watches a
-    glob and emits each newly arrived archive's rows as a microbatch.
+    glob and emits the newly arrived archives' rows as a microbatch.
 
     The reference is batch-only; this is the Spark-native extension of
     its scan layer to continuous archive ingest (mailbox exports landing
     in object storage). Offsets are the sorted set of files already
     ingested — the same compacted-file-log design as Spark's own
     FileStreamSource — so recovery from a checkpoint replans exactly the
-    unseen files. Each microbatch runs the unchanged batch planner over
-    the new files (node buckets A3/A4, error tolerance A18) and the
-    unchanged batch reader per task: one code path for batch and stream.
+    unseen files. Each microbatch runs the batch planner once over all
+    of its new files (byte-balanced runs, A3/A4; error tolerance A18),
+    so a microbatch of many small archives runs in at most
+    ``min(cores, files)`` tasks, and the unchanged batch reader per
+    task: one code path for batch and stream.
 
     ``read_limit`` is a bind-time cap in the reference (A6) and is not
-    meaningful under continuous ingest; it applies per planned file here.
+    meaningful under continuous ingest; it applies per microbatch here.
     """
 
     def __init__(self, options, schema: StructType):
-        self._options = dict(options)
-        self._schema = schema
         self._batch = PstReader(options, schema)
 
     def initialOffset(self) -> dict:
@@ -507,12 +542,7 @@ class PstStreamReader(DataSourceStreamReader):
         return {"seen": sorted(files)}
 
     def partitions(self, start: dict, end: dict):
-        new = sorted(set(end["seen"]) - set(start["seen"]))
-        parts = []
-        for f in new:
-            per_file = PstReader({**self._options, "path": f}, self._schema)
-            parts.extend(p for p in per_file.partitions() if p.value[0][0] is not None)
-        return parts or [InputPartition(((None, None),))]
+        return self._batch.plan(sorted(set(end["seen"]) - set(start["seen"])))
 
     def read(self, partition):
         return self._batch.read(partition)

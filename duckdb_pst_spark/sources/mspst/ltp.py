@@ -115,19 +115,30 @@ class PropertyContext:
         self.heap = Heap(pst.read_data(bid_data))
         if self.heap.b_client_sig != 0xBC:
             raise PstError(f"not a PC heap (sig {self.heap.b_client_sig:#x})")
-        self._sub = pst.read_subnodes(bid_sub)
+        self._bid_sub = bid_sub
+        self._sub: dict[int, tuple[int, int]] | None = None
         self.props: dict[int, tuple[int, bytes | int]] = {}
         for key, data in Bth(self.heap, self.heap.hid_user_root).records:
             (pid,) = struct.unpack("<H", key)
             ptype, dw = struct.unpack("<HI", data)
             self.props[pid] = (ptype, dw)
 
+    @property
+    def subnodes(self) -> dict[int, tuple[int, int]]:
+        """The node's subnode map {nid: (bidData, bidSub)}, read on first
+        use: a PC whose requested values all sit on its heap never walks
+        the subnode tree, and the messaging layer reuses this map for
+        recipients and attachments instead of reading it again."""
+        if self._sub is None:
+            self._sub = self._pst.read_subnodes(self._bid_sub)
+        return self._sub
+
     def _hnid_bytes(self, hnid: int) -> bytes:
         if hnid == 0:
             return b""
         if hnid & 0x1F == 0:  # HID → heap item
             return self.heap.item(hnid)
-        bd, bs = self._sub[hnid]  # NID → subnode data tree
+        bd, bs = self.subnodes[hnid]  # NID → subnode data tree
         return b"".join(self._pst.read_data(bd))
 
     def get(self, pid: int):

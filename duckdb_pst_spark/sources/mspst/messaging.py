@@ -205,8 +205,9 @@ class PstArchive:
 
         e = self.pst.nbt[nid]
         pc = ltp.PropertyContext(self.pst, e.bid_data, e.bid_sub)
-        # The subnode tree exists only for recipients/attachments —
-        # a metadata-only projection never walks it.
+        # Recipients and attachments live in the subnode tree — a
+        # metadata-only projection never asks for it here (the PC reads
+        # it only for a value stored outside its heap, e.g. a long body).
         need_attach = (
             columns is None
             or not columns.isdisjoint(
@@ -215,7 +216,7 @@ class PstArchive:
         )
         if want("recipients") or need_attach:
             DECODE_STATS["subnodes"] += 1
-            sub = self.pst.read_subnodes(e.bid_sub)
+            sub = pc.subnodes
         else:
             sub = {}
 

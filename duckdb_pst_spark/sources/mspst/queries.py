@@ -448,9 +448,9 @@ def q_stream_pst_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     /root/reference/test/sql/read_unittest_pst.test, applied per
     arriving archive).
 
-    Scale shape: each archive is planned/read by the unchanged batch
-    code path (partition bucketing, projection pushdown), one microbatch
-    per arrival set; executors write the sink files, the driver holds no
+    Scale shape: each arrival set is one microbatch, planned in one call
+    and read by the unchanged batch code path (byte-balanced partitions,
+    projection pushdown); executors write the sink files, the driver holds no
     rows; checkpoint state is O(#archives seen), not O(rows)."""
     import os
     import shutil

@@ -99,7 +99,7 @@ def pst_scan_info(spark, path: str, table: str = "messages", **options):
     Python DataSource API has no explain-customization hook (the plan
     shows only ``BatchScan pst`` + ReadSchema), so the same metadata is
     a first-class introspection query: it runs the REAL bind-time
-    planner (glob expansion A1, NBT crawl A3, bucket packing A4,
+    planner (glob expansion A1, NBT crawl A3, byte-balanced runs A4,
     read_limit A6) and reports what a scan with these options would do
     — plus ``rows_planned``, the denominator of the reference's
     progress percentage (``PSTReadProgress``, table_function.cpp:359-365;

@@ -343,7 +343,7 @@ def test_scan_info_metadata(spark, tmp_path):
         spark, str(tmp_path / "*.pst"), partition_size="5", columns="node_id,subject"
     ).first()
     assert info.files_read == 2
-    # 24 message nids at 5 per bucket: 4 full buckets + packed remainders
+    # 24 message nids at most 5 per partition: ceil(24 / 5) byte-balanced runs
     assert info.partitions_read >= 5
     assert info.partition_size == 5
     assert info.rows_planned == 24
