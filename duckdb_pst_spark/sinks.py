@@ -8,8 +8,9 @@ equivalents, with the layout knobs that matter at lake scale:
   the join key lets later equi-joins/aggregations on that key skip the
   shuffle entirely, the closest Spark gets to DuckDB's in-process
   locality,
-- a whole-archive ingest that materializes all 8 PST tables at once
-  (what a 72 GiB/167-file corpus crawl would feed).
+- a whole-archive ingest that lands the PST tables of a glob of
+  archives through the binary reader (what a 72 GiB/167-file corpus
+  crawl would feed).
 """
 
 from __future__ import annotations
@@ -206,29 +207,30 @@ def ingest_pst_archive(
     spark: SparkSession,
     out_dir: str,
     *,
-    path_glob: str | None = None,
+    path_glob: str,
     partition_messages_by_class: bool = True,
     **reader_kw,
 ) -> dict[str, str]:
-    """Crawl a PST archive (all 8 table functions) into a parquet lake —
-    the batch-ingest pattern the reference's ad-hoc scans imply. Messages
-    are partitioned by message_class so each typed query (notes, tasks,
-    …) prunes to its own directories. Returns table → output path."""
-    from duckdb_pst_spark.sources import pst
+    """Crawl PST archives into a parquet lake, one directory per table
+    function (notes are skipped: they are a subset of messages) — the
+    batch-ingest pattern the reference's ad-hoc scans imply. Each table
+    is a ``format("pst")`` scan of ``path_glob`` with ``reader_kw`` as
+    reader options. Messages are partitioned by message_class so each
+    typed query (notes, tasks, …) prunes to its own directories.
+    Returns ``read_pst_<table>`` → output path."""
+    from duckdb_pst_spark.sources.mspst.datasource import register
+    from duckdb_pst_spark.sql import TABLES
 
+    register(spark)
     out: dict[str, str] = {}
-    for name, reader in pst.READERS.items():
-        if name in ("read_pst_notes",):  # subset of read_pst_messages
+    for t in TABLES:
+        if t == "notes":
             continue
-        df = reader(spark, path_glob, **reader_kw)
-        dest = f"{out_dir}/{name.removeprefix('read_pst_')}"
-        part = (
-            ["message_class"]
-            if partition_messages_by_class and name == "read_pst_messages"
-            else None
-        )
+        df = spark.read.format("pst").option("table", t).options(**reader_kw).load(path_glob)
+        dest = f"{out_dir}/{t}"
+        part = ["message_class"] if partition_messages_by_class and t == "messages" else None
         export_parquet(df, dest, partition_by=part)
-        out[name] = dest
+        out[f"read_pst_{t}"] = dest
     return out
 
 

@@ -17,7 +17,9 @@ Maps the reference's scan architecture onto the DataSource API
   (A10, function_state.cpp:59-71)
 - named scan parameters (A21): ``read_body_size_bytes``,
   ``read_attachment_body``, ``read_limit``
-- class filter applied at read (A5); Catalyst prunes columns on top (A7)
+- class filter applied at read, or per node at plan time under
+  ``read_limit`` so the limit counts only matching rows (A5); Catalyst
+  prunes columns on top (A7)
 
 Why one task per core: every Python task costs its worker about
 0.15-0.2 CPU-s before it reads a byte (pyspark invalidates the import
@@ -365,10 +367,11 @@ class PstReader(DataSourceReader):
         in one archive and end in another, big archives split across
         tasks, small ones share a task. The folders table has a dozen-odd
         rows per file and is never split within a file: each file is one
-        unit weighted by its size. With ``read_limit`` the crawl stops
-        once enough message nodes are planned (A6) and only the first
-        ``read_limit`` nodes are cut. An unreadable file is logged and
-        skipped (A18, table_function.cpp:228-235).
+        unit weighted by its size. With ``read_limit`` the plan holds
+        exactly the first ``read_limit`` rows (``_crawl``): folder
+        entries then carry their folder nids, and typed tables count only
+        nodes of their class. An unreadable file is logged and skipped
+        (A18, table_function.cpp:228-235).
 
         Why one task per core rather than one per file or per bucket:
         each Python task costs its worker about 0.15-0.2 CPU-s before it
@@ -381,7 +384,7 @@ class PstReader(DataSourceReader):
         crawled = self._crawl(files, limit)
         folders = self.table == "folders"
         if folders:
-            units = [(f, None) for f, _size, _nids in crawled]
+            units = [(f, None if limit is None else nids) for f, _size, nids in crawled]
             weights = [size for _f, size, _nids in crawled]
             rows = sum(len(nids) for _f, _size, nids in crawled)
         else:
@@ -390,37 +393,50 @@ class PstReader(DataSourceReader):
                 if nids:
                     units.extend((f, nid) for nid in nids)
                     weights.extend([size / len(nids)] * len(nids))
-            units, weights = units[:limit], weights[:limit]
             rows = len(units)
         if not units:
             return [InputPartition(((None, None),))]  # nothing to read
         cores = len(os.sched_getaffinity(0))
         n_parts = min(len(units), max(math.ceil(rows / psize), min(cores, len(crawled))))
         cuts = balanced_cuts(weights, n_parts, None if folders else psize)
+        runs = [units[a:b] for a, b in zip(cuts, cuts[1:])]
+        if folders:
+            return [InputPartition(tuple(run)) for run in runs]
         return [
             InputPartition(tuple(
-                (f, None if folders else [nid for _f, nid in run])
-                for f, run in itertools.groupby(units[a:b], key=operator.itemgetter(0))
+                (f, [nid for _f, nid in entry])
+                for f, entry in itertools.groupby(run, key=operator.itemgetter(0))
             ))
-            for a, b in zip(cuts, cuts[1:])
+            for run in runs
         ]
 
     def _crawl(self, files: list[str], limit: int | None) -> list[tuple]:
-        """(file, file bytes, sorted message nids — folder nids for the
-        folders table) per readable file, in file order."""
+        """(file, file bytes, planned nids) per readable file, in file
+        order. The nids are the file's message nodes in nid order, or its
+        reachable folders root first for the folders table. Under
+        ``read_limit`` a typed table keeps only nodes of its class,
+        probed per node (A5), and the crawl stops once ``read_limit``
+        nodes are planned (A6), so the plan holds exactly the rows the
+        scan returns."""
+        from duckdb_pst_spark.sources.mspst.messaging import class_nids, folder_nids
         from duckdb_pst_spark.sources.mspst.ndb import (
-            NID_TYPE_NORMAL_FOLDER,
             NID_TYPE_NORMAL_MESSAGE,
             PstFile,
             nid_type,
         )
 
-        want = NID_TYPE_NORMAL_FOLDER if self.table == "folders" else NID_TYPE_NORMAL_MESSAGE
+        want = CLASS_FILTER.get(self.table)
 
-        def crawl_one(f):
+        def crawl_one(f, keep=None):
             try:
                 with PstFile(f) as p:
-                    return (f, p.ib_file_eof, sorted(n for n in p.nbt if nid_type(n) == want))
+                    if self.table == "folders":
+                        nids = folder_nids(p)
+                    else:
+                        nids = sorted(n for n in p.nbt if nid_type(n) == NID_TYPE_NORMAL_MESSAGE)
+                        if keep is not None and want is not None:
+                            nids = class_nids(p, nids, want)
+                    return (f, p.ib_file_eof, list(itertools.islice(nids, keep)))
             except Exception as exc:
                 print(f"pst: skipping unreadable file {f}: {exc}", file=sys.stderr)
                 return None
@@ -434,18 +450,17 @@ class PstReader(DataSourceReader):
 
             with ThreadPoolExecutor(min(32, len(files))) as ex:
                 return [r for r in ex.map(crawl_one, files) if r is not None]
-        # A6: read_limit stops the crawl as soon as enough message nodes
-        # are planned — serial keeps the early stop exact.
+        # A6: read_limit stops the crawl as soon as enough nodes are
+        # planned — serial keeps the early stop exact.
         out, seen = [], 0
         for f in files:
-            r = crawl_one(f)
+            r = crawl_one(f, None if limit is None else limit - seen)
             if r is None:
                 continue
             out.append(r)
-            if self.table != "folders":
-                seen += len(r[2])
-                if limit is not None and seen >= limit:
-                    break
+            seen += len(r[2])
+            if limit is not None and seen >= limit:
+                break
         return out
 
     def read(self, partition):
@@ -473,13 +488,11 @@ class PstReader(DataSourceReader):
                 "pst_name": a.display_name,
                 "record_key": a.record_key,
             }
-            limit = int(self.read_limit) if self.read_limit is not None else None
-            n = 0
             if self.table == "folders":
-                rows = a.folders()
+                rows = a.folders() if nids is None else map(a.folder_row, nids)
             else:
                 rows = []
-                for nid in nids or []:
+                for nid in nids:
                     # A18 error tolerance (row_serializer.cpp:1252-1263):
                     # a node that fails to parse is logged and skipped;
                     # the scan keeps going (PERMISSIVE-reader semantics).
@@ -501,11 +514,8 @@ class PstReader(DataSourceReader):
             for r in rows:
                 if want is not None and not (r.get("message_class") or "").startswith(want):
                     continue  # A5 class filter
-                if limit is not None and n >= limit:
-                    break
                 full = {**meta, **r}
                 yield tuple(_tupleize(full.get(f)) for f in self.fields)
-                n += 1
         finally:
             a.close()
 

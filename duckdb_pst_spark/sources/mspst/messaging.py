@@ -12,6 +12,7 @@ reader (this module) or the parquet fixtures.
 from __future__ import annotations
 
 import struct
+import sys
 from typing import Iterator
 
 from duckdb_pst_spark.sources.mspst import ltp
@@ -55,6 +56,8 @@ DECODE_STATS = {
 }
 
 _ARCHIVE_META_COLS = frozenset({"pst_path", "pst_name", "record_key"})
+
+PR_MESSAGE_CLASS = 0x001A
 
 PSETID_APPOINTMENT = bytes.fromhex("90da d862 0c45 1b10 98da 0008 2b2a 56c2".replace(" ", ""))
 PSETID_TASK = bytes.fromhex("03200608 0000 0000 c000 0000 0000 0046".replace(" ", ""))
@@ -102,6 +105,41 @@ class NamedPropMap:
         return self.by_lid.get((guid, lid)) or self.by_lid.get(lid)
 
 
+def folder_nids(pst: PstFile) -> list[int]:
+    """Hierarchy-reachable normal folders, root first — matches the
+    reference's folder iteration (search-folder subtrees excluded:
+    the golden table has 16 rows, not 17 —
+    read_unittest_pst.test:14-37)."""
+    children: dict[int, list[int]] = {}
+    for nid, e in pst.nbt.items():
+        if nid_type(nid) == NID_TYPE_NORMAL_FOLDER and nid != NID_ROOT_FOLDER:
+            children.setdefault(e.nid_parent, []).append(nid)
+    out: list[int] = []
+    stack = [NID_ROOT_FOLDER]
+    while stack:
+        nid = stack.pop()
+        out.append(nid)
+        stack.extend(sorted(children.get(nid, []), reverse=True))
+    return out
+
+
+def class_nids(pst: PstFile, nids, prefix: str) -> Iterator[int]:
+    """The message nodes among ``nids`` whose ``PR_MESSAGE_CLASS`` starts
+    with ``prefix``, probing that one property per node — the
+    reference's planning-time class filter (A5,
+    table_function.cpp:133-175). A node whose property context cannot
+    be read is logged and skipped (A18)."""
+    for nid in nids:
+        try:
+            e = pst.nbt[nid]
+            cls = ltp.PropertyContext(pst, e.bid_data, e.bid_sub).get(PR_MESSAGE_CLASS) or ""
+        except Exception as exc:
+            print(f"pst: skipping unparseable node {nid} in {pst.path}: {exc}", file=sys.stderr)
+            continue
+        if cls.startswith(prefix):
+            yield nid
+
+
 class PstArchive:
     """High-level reader for one PST file (per-task instance)."""
 
@@ -128,23 +166,6 @@ class PstArchive:
 
     # ------------------------------------------------------------ folders
 
-    def folder_nids(self) -> list[int]:
-        """Hierarchy-reachable normal folders, root first — matches the
-        reference's folder iteration (search-folder subtrees excluded:
-        the golden table has 16 rows, not 17 —
-        read_unittest_pst.test:14-37)."""
-        children: dict[int, list[int]] = {}
-        for nid, e in self.pst.nbt.items():
-            if nid_type(nid) == NID_TYPE_NORMAL_FOLDER and nid != NID_ROOT_FOLDER:
-                children.setdefault(e.nid_parent, []).append(nid)
-        out: list[int] = []
-        stack = [NID_ROOT_FOLDER]
-        while stack:
-            nid = stack.pop()
-            out.append(nid)
-            stack.extend(sorted(children.get(nid, []), reverse=True))
-        return out
-
     def folder_row(self, nid: int) -> dict:
         e = self.pst.nbt[nid]
         pc = ltp.PropertyContext(self.pst, e.bid_data, e.bid_sub)
@@ -166,7 +187,7 @@ class PstArchive:
         }
 
     def folders(self) -> Iterator[dict]:
-        for nid in self.folder_nids():
+        for nid in folder_nids(self.pst):
             yield self.folder_row(nid)
 
     # ----------------------------------------------------------- messages
@@ -226,7 +247,7 @@ class PstArchive:
             return s[: max(read_body_size_bytes // 2, 1)]
 
         row = {"node_id": nid, "parent_node_id": e.nid_parent,
-               "message_class": pc.get(0x001A)}
+               "message_class": pc.get(PR_MESSAGE_CLASS)}
         if want("subject"):
             row["subject"] = _clean_subject(pc.get(0x0037))
         if want("body"):

@@ -20,8 +20,6 @@ from __future__ import annotations
 
 import sys
 
-PR_MESSAGE_CLASS = 0x001A
-
 
 def file_count(path: str, table: str = "messages") -> int:
     """Exact row count for one PST file without reading row data.
@@ -31,9 +29,8 @@ def file_count(path: str, table: str = "messages") -> int:
     unreadable file is logged and counted as 0 (A18 error tolerance,
     table_function.cpp:228-235).
     """
-    from duckdb_pst_spark.sources.mspst import ltp
     from duckdb_pst_spark.sources.mspst.datasource import CLASS_FILTER
-    from duckdb_pst_spark.sources.mspst.messaging import PstArchive
+    from duckdb_pst_spark.sources.mspst.messaging import PstArchive, class_nids, folder_nids
 
     try:
         a = PstArchive(path)
@@ -42,22 +39,12 @@ def file_count(path: str, table: str = "messages") -> int:
         return 0
     try:
         if table == "folders":
-            return len(a.folder_nids())
+            return len(folder_nids(a.pst))
         nids = a.message_nids()
         want = CLASS_FILTER.get(table)
         if want is None:  # messages: NBT crawl alone is exact
             return len(nids)
-        n = 0
-        for nid in nids:
-            try:
-                e = a.pst.nbt[nid]
-                pc = ltp.PropertyContext(a.pst, e.bid_data, e.bid_sub)
-                cls = pc.get(PR_MESSAGE_CLASS) or ""
-            except Exception:
-                continue  # unparseable node → not counted (A18)
-            if cls.startswith(want):
-                n += 1
-        return n
+        return sum(1 for _ in class_nids(a.pst, nids, want))  # unparseable: logged, not counted
     finally:
         a.close()
 

@@ -8,28 +8,25 @@ src/pst_extension.cpp:13-45). Two Spark equivalents are provided:
 
 1. ``register_pst_views(spark, path)`` — one temp view per table over the
    distributed ``format("pst")`` DataSource. This is the scale path: the
-   view inherits the source's partition planning (one task per
-   node-range bucket), so ``spark.sql("SELECT ... FROM pst_messages")``
-   parallelizes like any table.
+   view inherits the source's partition planning (byte-balanced runs of
+   message nodes, one per core), so
+   ``spark.sql("SELECT ... FROM pst_messages")`` parallelizes like any
+   table.
 2. ``register_pst_udtfs(spark)`` — Python UDTFs named exactly like the
    reference's functions, so the reference's own SQL runs verbatim with
    positional scan parameters:
    ``SELECT * FROM read_pst_messages('x.pst', 5)`` (path, read_limit,
-   read_body_size_bytes, read_attachment_body). UDTF scans evaluate on a
-   single executor per call — the SQL-parity convenience path, not the
+   read_body_size_bytes, read_attachment_body). A UDTF call runs the
+   ``format("pst")`` reader's plan and reads in one task, so both paths
+   return the same rows — the SQL-parity convenience path, not the
    100 TB path; use the DataSource/views for scale.
 """
 
 from __future__ import annotations
 
-import glob as globmod
-
 from pyspark.sql import SparkSession
 
-from duckdb_pst_spark.sources.mspst.datasource import (
-    CLASS_FILTER,
-    table_schema,
-)
+from duckdb_pst_spark.sources.mspst.datasource import PstDataSource, table_schema
 
 TABLES = (
     "folders",
@@ -59,33 +56,20 @@ def register_pst_views(spark: SparkSession, path: str, prefix: str = "pst_") -> 
 
 
 def _scan_rows(table, path, read_limit, read_body_size_bytes, read_attachment_body):
-    """Shared UDTF scan body: glob → per-file archive → ordered tuples."""
-    from duckdb_pst_spark.sources.mspst.datasource import _tupleize
-    from duckdb_pst_spark.sources.mspst.messaging import PstArchive
-
-    fields = [f.name for f in table_schema(table).fields]
-    want = CLASS_FILTER.get(table)
-    n = 0
-    for f in sorted(globmod.glob(path)):
-        a = PstArchive(f)
-        try:
-            meta = {"pst_path": f, "pst_name": a.display_name, "record_key": a.record_key}
-            if table == "folders":
-                rows = a.folders()
-            else:
-                rows = a.messages(
-                    read_body_size_bytes=read_body_size_bytes,
-                    read_attachment_body=read_attachment_body,
-                )
-            for r in rows:
-                if want is not None and not (r.get("message_class") or "").startswith(want):
-                    continue
-                if read_limit is not None and n >= read_limit:
-                    return
-                yield tuple(_tupleize({**meta, **r}.get(fld)) for fld in fields)
-                n += 1
-        finally:
-            a.close()
+    """UDTF scan body: every partition of the ``format("pst")`` plan for
+    these options, read in order in the calling process."""
+    opts = {
+        "path": path,
+        "table": table,
+        "read_body_size_bytes": str(read_body_size_bytes),
+        "read_attachment_body": str(bool(read_attachment_body)).lower(),
+    }
+    if read_limit is not None:
+        opts["read_limit"] = str(read_limit)
+    ds = PstDataSource(opts)
+    reader = ds.reader(ds.schema())
+    for p in reader.partitions():
+        yield from reader.read(p)
 
 
 def register_pst_udtfs(spark: SparkSession) -> None:

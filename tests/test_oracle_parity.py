@@ -82,54 +82,6 @@ def test_no_nested_output_columns(spark, sf_dir):
     assert not offenders, f"oracle-bearing queries with nested output columns: {offenders}"
 
 
-def test_verify_window_rotation_consistent():
-    """The driver checks the first 50 of load_all(): every window slot
-    must be oracle-bearing (a rows-only spec can never go green), the
-    rows-only specs must sort last, and ROUND5_PLANNED must name real
-    oracle-bearing queries so the next rotation stays executable."""
-    from duckdb_pst_spark.registry import (
-        ROUND5_PLANNED,
-        ROUND6_ADDITIONS,
-        ROUND7_ADDITIONS,
-        ROUND7_CANARIES,
-        ROUND8_ADDITIONS,
-        ROUND9_ADDITIONS,
-        ROUND9_CANARIES,
-        ROUND10_ADDITIONS,
-        VERIFY_FIRST,
-    )
-
-    names = list(SPECS)
-    assert names[: len(VERIFY_FIRST)] == list(VERIFY_FIRST)
-    assert all(SPECS[n].oracle is not None for n in VERIFY_FIRST)
-    rows_only = [n for n, s in SPECS.items() if s.oracle is None]
-    if rows_only:  # class emptied in round 10; guard names[-0:] == all
-        assert names[-len(rows_only):] == rows_only
-    # the round-11 window: the three round-11 registrations lead (the
-    # Q3/Q13/Q22 twins each need their first hash-checked driver row),
-    # then the pure oldest-green-first rotation — three r4 stragglers,
-    # the 29-query r5 block, r6 registration-order fill. No canaries
-    # owed (no green plan was rewritten this round).
-    from duckdb_pst_spark.registry import ROUND11_ADDITIONS
-
-    n_add = len(ROUND11_ADDITIONS)
-    assert list(VERIFY_FIRST[:n_add]) == list(ROUND11_ADDITIONS)
-    assert list(VERIFY_FIRST[n_add:n_add + 3]) == [
-        "q_corpus_card", "q_filter_cascade", "q_media_dedup"
-    ]
-    r5_block = set(VERIFY_FIRST[n_add + 3:n_add + 32])
-    assert r5_block <= set(ROUND5_PLANNED) | {
-        "q_dedup_minhash", "q_heavy_hitters", "q_tfidf", "q_bigram_surprise",
-    }, r5_block - set(ROUND5_PLANNED)
-    assert len(VERIFY_FIRST) == 50, len(VERIFY_FIRST)
-    for planned in (ROUND5_PLANNED, ROUND6_ADDITIONS, ROUND7_CANARIES,
-                    ROUND7_ADDITIONS, ROUND8_ADDITIONS, ROUND9_ADDITIONS,
-                    ROUND9_CANARIES, ROUND10_ADDITIONS, ROUND11_ADDITIONS):
-        assert all(
-            n in SPECS and SPECS[n].oracle is not None for n in planned
-        ), [n for n in planned if n not in SPECS or SPECS[n].oracle is None]
-
-
 def test_survey_inventory_matches_registry():
     """SURVEY.md §2's operator inventory and the registry must stay 1:1 —
     the declared surface IS the checked surface."""

@@ -14,7 +14,12 @@ import sys
 
 import pytest
 
-from duckdb_pst_spark.sources.mspst.datasource import PstDataSource, balanced_cuts
+from duckdb_pst_spark import sql
+from duckdb_pst_spark.sources.mspst.datasource import (
+    CLASS_FILTER,
+    PstDataSource,
+    balanced_cuts,
+)
 from duckdb_pst_spark.sources.mspst.ndb import PstFile, nid_type
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "perfbench"))
@@ -122,6 +127,51 @@ def test_read_limit_plans_first_rows_only(corpus):
 
     parts = _reader(d, read_limit="30", partition_size="4").partitions()
     assert _planned(parts) == want and len(parts) == math.ceil(30 / 4)
+
+
+def test_read_limit_counts_only_the_tables_class(corpus):
+    """Typed tables probe each node's class at plan time under a limit,
+    so the limit counts matching rows only (A5 + A6)."""
+    d, manifest = corpus
+    for table, cls in CLASS_FILTER.items():
+        matching = sum(a["class_counts"].get(cls, 0) for a in manifest)
+        for limit in (3, matching + 5):
+            r = _reader(d, table=table, read_limit=str(limit), columns="message_class")
+            parts = r.partitions()
+            rows = [row for p in parts for row in r.read(p)]
+            assert len(_planned(parts)) == len(rows) == min(limit, matching), (table, limit)
+            assert all(c.startswith(cls) for (c,) in rows), table
+
+
+def test_read_limit_on_folders_spans_files(corpus):
+    d, manifest = corpus
+    first = manifest[0]["folders"]
+    r = _reader(d, table="folders", read_limit=str(first + 2))
+    parts = r.partitions()
+    entries = [e for p in parts for e in p.value]
+    assert [len(nids) for _f, nids in entries] == [first, 2]
+    assert sum(1 for p in parts for _row in r.read(p)) == first + 2
+
+
+def test_udtf_scan_equals_reader_rows(corpus):
+    d, manifest = corpus
+    glob = str(d / "*.pst")
+
+    def reader_rows(**opts):
+        r = _reader(d, **opts)
+        return [row for p in r.partitions() for row in r.read(p)]
+
+    msgs = list(sql._scan_rows("messages", glob, None, 1_000_000, False))
+    assert len(msgs) == sum(SIZES) and msgs == reader_rows()
+    tasks = sum(a["class_counts"]["IPM.Task"] for a in manifest)
+    rows = list(sql._scan_rows("tasks", glob, None, 1_000_000, False))
+    assert len(rows) == tasks and rows == reader_rows(table="tasks")
+    for table in ("messages", "contacts", "folders"):
+        rows = list(sql._scan_rows(table, glob, 3, 200, True))
+        want = reader_rows(
+            table=table, read_limit="3", read_body_size_bytes="200", read_attachment_body="true"
+        )
+        assert len(rows) == 3 and rows == want, table
 
 
 def test_folders_one_entry_per_file(corpus):
