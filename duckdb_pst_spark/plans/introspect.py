@@ -115,6 +115,11 @@ def codegen_fraction(df: DataFrame) -> float:
     return inside / total if total else 0.0
 
 
+# the two conjuncts InferFiltersFromGenerate adds, over a lambda payload
+_SIZE_GT0_HOF = re.compile(r"size\([^\n]*lambdafunction[^\n]*\) > 0\)")
+_ISNOTNULL_HOF = re.compile(r"isnotnull\([^\n]*lambdafunction")
+
+
 def inferred_generator_hof_filters(plan: str) -> list[str]:
     """r12 generator-trap detector (VERDICT r11 item 8).
 
@@ -125,23 +130,19 @@ def inferred_generator_hof_filters(plan: str) -> list[str]:
     collapse re-inlines the HOF, so the generator-feeding expression is
     evaluated 2-3x per row (measured 7x wall on q_ngram_novelty's
     trigram HOF in r11, 1.2-1.9x on the tokenization HOF in the four
-    r12 finds). This walks the FORMATTED plan and returns every
-    Filter/scan condition line matching the inferred-filter signature
-    with a lambda-bearing payload — the textual fingerprint that only
-    this rewrite produces.
+    r12 finds). This walks the FORMATTED plan and returns, for every
+    Filter or scan block that carries both conjuncts of the inferred
+    filter on a lambda-bearing payload, its first such line — the
+    textual fingerprint that only this rewrite produces. The conjuncts
+    are matched independently: a Filter joins them with ``AND``, a
+    scan's ``DataFilters`` list separates them with a comma.
     """
     norm = re.sub(r"#\d+", "", plan)
     hits: list[str] = []
-    for block in norm.split("\n\n"):
+    for block in re.split(r"\n{2,}", norm):
         if not re.match(r"\(\d+\) (Filter|BatchScan|Scan)", block):
             continue
-        for line in block.splitlines():
-            if "lambdafunction" not in line:
-                continue
-            if re.search(
-                r"size\([^\n]*lambdafunction[^\n]*\) > 0\)"
-                r" AND isnotnull\([^\n]*lambdafunction",
-                line,
-            ):
-                hits.append(line.strip()[:120])
+        if _SIZE_GT0_HOF.search(block) and _ISNOTNULL_HOF.search(block):
+            line = next(ln for ln in block.splitlines() if _SIZE_GT0_HOF.search(ln))
+            hits.append(line.strip()[:120])
     return hits

@@ -4,9 +4,8 @@ surface the reference reaches through its SDK's ``pst``/``folder``/
 ``message`` classes and serializes in
 /root/reference/src/row_serializer.cpp.
 
-Row dicts use the reference's output column names (schema.hpp) so the
-Spark source can build the identical DataFrames from either the binary
-reader (this module) or the parquet fixtures.
+Row dicts use the reference's output column names (schema.hpp), so the
+Spark source builds the reference's DataFrames from them directly.
 """
 
 from __future__ import annotations

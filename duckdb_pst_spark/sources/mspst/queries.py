@@ -1,5 +1,5 @@
-"""Registered queries over the BINARY PST reader (SURVEY.md §2.C via the
-real [MS-PST] parser, not the parquet fixtures).
+"""Registered queries over the binary PST reader (SURVEY.md §2.C),
+``spark.read.format("pst")`` on the reference's own test archive.
 
 The oracle for these can't re-read PST (DuckDB here has no PST
 extension), so the golden queries pin the Spark result to literal VALUES
@@ -19,13 +19,9 @@ GOLDEN_PST = "/root/reference/test/unittest.pst"
 
 
 def _pst(spark: SparkSession, table: str, **options) -> DataFrame:
-    from duckdb_pst_spark.sources.mspst.datasource import PstDataSource
+    from duckdb_pst_spark.sources.mspst.datasource import register
 
-    # idempotent per-session registration
-    try:
-        spark.dataSource.register(PstDataSource)
-    except Exception:
-        pass
+    register(spark)
     r = spark.read.format("pst").option("table", table)
     for k, v in options.items():
         r = r.option(k, str(v).lower() if isinstance(v, bool) else str(v))
@@ -436,15 +432,15 @@ def q_pstbin_parent_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_stream_pst_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming PST ingest (``spark.readStream.format("pst")``) as a
-    registered, driver-checkable query — previously test-gated only
-    (tests/test_pst_source.py). Bounded replay of the continuous-mailbox
-    deployment: archive ``a.pst`` lands, an AvailableNow run ingests it
-    through the parquet file sink; ``b.pst`` lands late and a SECOND run
-    from the SAME checkpoint ingests exactly the new archive (file-log
-    offsets over the scan planner — already-committed archives never
-    re-emit). The finalized batch scan rolls up per-archive per-class
-    message counts, pinned to the reference's golden unittest.pst
-    inventory twice over (the reference's batch scan semantics,
+    registered, oracle-checked query. Bounded replay of the
+    continuous-mailbox deployment: archive ``a.pst`` lands, an
+    AvailableNow run ingests it through the parquet file sink; ``b.pst``
+    lands late and a SECOND run from the SAME checkpoint ingests exactly
+    the new archive (file-log offsets over the scan planner —
+    already-committed archives never re-emit). The finalized batch scan
+    rolls up per-archive per-class message counts, pinned to the
+    reference's golden unittest.pst inventory twice over (the
+    reference's batch scan semantics,
     /root/reference/test/sql/read_unittest_pst.test, applied per
     arriving archive).
 
@@ -456,13 +452,10 @@ def q_stream_pst_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import uuid as _uuid
 
-    from duckdb_pst_spark.sources.mspst.datasource import PstDataSource
+    from duckdb_pst_spark.sources.mspst.datasource import register
     from duckdb_pst_spark.streaming.finalize import _CACHE_DIR, _prune_stale
 
-    try:
-        spark.dataSource.register(PstDataSource)
-    except Exception:
-        pass
+    register(spark)
     _prune_stale()
     run = f"pst_ingest_{_uuid.uuid4().hex[:8]}"
     land = str(_CACHE_DIR / f"{run}_land")

@@ -43,6 +43,31 @@ def test_detector_fires_on_reconstructed_trap(spark, sf_dir):
     assert inferred_generator_hof_filters(formatted_plan(trap))
 
 
+# The scan block of q_explode_agg's pre-cure formatted plan: pushdown
+# lands the inferred conjuncts in DataFilters, comma-separated.
+SCAN_ONLY_TRAP = """\
+(1) BatchScan parquet file:/data/documents.parquet
+Output [1]: [text#7399]
+DataFilters: [(size(filter(split(text#7399,  , -1), lambdafunction(NOT (lambda x_41#7409 = ), \
+lambda x_41#7409, false)), false) > 0), isnotnull(filter(split(text#7399,  , -1), \
+lambdafunction(NOT (lambda x_41#7409 = ), lambda x_41#7409, false)))]
+Format: parquet
+Location: InMemoryFileIndex(1 paths)[file:/data/documents.parquet]
+ReadSchema: struct<text:string>
+"""
+
+
+def test_detector_fires_on_scan_only_trap():
+    """The trap is flagged when it survives only in a scan's DataFilters
+    list, with no Filter block carrying the AND form — also as the first
+    block of a formatted plan, which follows the tree after two blank
+    lines."""
+    assert "\n\n" not in SCAN_ONLY_TRAP and " AND " not in SCAN_ONLY_TRAP
+    assert inferred_generator_hof_filters(SCAN_ONLY_TRAP)
+    tree = "== Physical Plan ==\n* HashAggregate (5)\n+- BatchScan parquet (1)\n\n\n"
+    assert inferred_generator_hof_filters(tree + SCAN_ONLY_TRAP)
+
+
 def test_no_registered_plan_reinlines_a_generator_hof(spark, sf_dir):
     """Every registered query, one audit pass (single loop, not
     parametrize: plan building is the cost, and one shared session

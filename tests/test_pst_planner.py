@@ -2,7 +2,7 @@
 runs of the (file, nid)-sorted message list, one per core or one per
 ``partition_size`` rows, whichever is more.
 
-Runs in-process on a small generated corpus (perfbench/pstgen.py), so
+Runs in-process on the generated ``corpus`` fixture (conftest.py), so
 it needs neither Spark nor the reference's golden archive."""
 
 from __future__ import annotations
@@ -10,9 +10,6 @@ from __future__ import annotations
 import math
 import os
 import statistics
-import sys
-
-import pytest
 
 from duckdb_pst_spark import sql
 from duckdb_pst_spark.sources.mspst.datasource import (
@@ -22,26 +19,7 @@ from duckdb_pst_spark.sources.mspst.datasource import (
 )
 from duckdb_pst_spark.sources.mspst.ndb import PstFile, nid_type
 
-sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "perfbench"))
-import pstgen  # noqa: E402
-
-# messages per archive: uneven on purpose, so file-count planning and
-# byte-balanced planning disagree
-SIZES = (12, 40, 7, 25, 60)
 CORES = len(os.sched_getaffinity(0))
-
-
-@pytest.fixture(scope="module")
-def corpus(tmp_path_factory):
-    d = tmp_path_factory.mktemp("pst_planner")
-    manifest = []
-    for i, n in enumerate(SIZES):
-        manifest.append(pstgen.write_archive(str(d / f"a{i}.pst"), {
-            "name": f"Planner {i}", "seed": 1000 + i, "shape_seed": f"planner:{i}",
-            "n_messages": n, "attach_p": 0.2, "body_median": 300, "body_sigma": 0.8,
-            "body_cap": 6000, "attach_median": 2000, "max_recipients": 3,
-        }))
-    return d, manifest
 
 
 def _reader(d, **opts):
@@ -77,36 +55,36 @@ def test_every_message_planned_once_in_file_nid_order(corpus):
     d, manifest = corpus
     files = sorted(str(d / a["file"]) for a in manifest)
     want = [(f, nid) for f in files for nid in _message_nids(f)]
-    assert len(want) == sum(SIZES)
+    assert len(want) == sum(a["messages"] for a in manifest)
     for psize in ("4096", "10", "1"):
         assert _planned(_reader(d, partition_size=psize).partitions()) == want, psize
 
 
 def test_partition_count_and_row_cap(corpus):
-    d, _m = corpus
-    rows = sum(SIZES)
+    d, manifest = corpus
+    rows = sum(a["messages"] for a in manifest)
     for psize in (4096, 100, 33, 10, 1):
         parts = _reader(d, partition_size=str(psize)).partitions()
-        assert len(parts) == max(math.ceil(rows / psize), min(CORES, len(SIZES))), psize
+        assert len(parts) == max(math.ceil(rows / psize), min(CORES, len(manifest))), psize
         sizes = [sum(len(nids) for _f, nids in p.value) for p in parts]
         assert max(sizes) <= psize and min(sizes) >= 1, (psize, sizes)
 
 
 def test_partitions_balance_estimated_bytes(corpus):
-    d, _m = corpus
+    d, manifest = corpus
     parts = _reader(d).partitions()
     est = _estimated_bytes(parts)
     assert max(est) / statistics.median(est) <= 1.25, est
     # a run may span archives; an archive splits only where a cut lands
     entries = [e for p in parts for e in p.value]
-    assert len(entries) <= len(SIZES) + len(parts) - 1
+    assert len(entries) <= len(manifest) + len(parts) - 1
 
 
 def test_read_returns_every_row_once(corpus):
     d, manifest = corpus
     r = _reader(d, columns="pst_name,node_id")
     rows = [row for p in r.partitions() for row in r.read(p)]
-    assert len(rows) == len(set(rows)) == sum(SIZES)
+    assert len(rows) == len(set(rows)) == sum(a["messages"] for a in manifest)
     by_name = {}
     for name, _nid in rows:
         by_name[name] = by_name.get(name, 0) + 1
@@ -162,7 +140,7 @@ def test_udtf_scan_equals_reader_rows(corpus):
         return [row for p in r.partitions() for row in r.read(p)]
 
     msgs = list(sql._scan_rows("messages", glob, None, 1_000_000, False))
-    assert len(msgs) == sum(SIZES) and msgs == reader_rows()
+    assert len(msgs) == sum(a["messages"] for a in manifest) and msgs == reader_rows()
     tasks = sum(a["class_counts"]["IPM.Task"] for a in manifest)
     rows = list(sql._scan_rows("tasks", glob, None, 1_000_000, False))
     assert len(rows) == tasks and rows == reader_rows(table="tasks")

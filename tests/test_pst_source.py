@@ -1,156 +1,204 @@
-"""PST source-layer behavior tests — mirrors the reference's
-table_function_parameters.test / read_pst_folders.test /
-read_unittest_pst.test assertions (SURVEY.md §5) against the fixture
-parquet readers."""
+"""PST source-layer behaviour through ``spark.read.format("pst")`` — the
+reference's table_function_parameters.test / read_pst_folders.test /
+read_unittest_pst.test assertions (SURVEY.md §5) — over the generated
+``corpus`` archives (conftest.py). Expected values come from the
+writer's manifest, so no golden archive is needed."""
 
 from __future__ import annotations
+
+import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
-from duckdb_pst_spark.sources import fixtures, pst
+from duckdb_pst_spark.sources.mspst import messaging
+from duckdb_pst_spark.sources.mspst.datasource import (
+    CLASS_FILTER,
+    MESSAGE_SCHEMA,
+    PstDataSource,
+    register,
+)
 
-N_FILES = fixtures.DEFAULT_N_FILES
-N_MSGS = 12  # golden mix: 5 notes + 2 contacts + 1 dlist + 1 appt + 2 sticky + 1 task
+
+@pytest.fixture(scope="module")
+def scan(spark):
+    register(spark)
+
+    def read(path, table="messages", **opts):
+        return spark.read.format("pst").options(table=table, **opts).load(str(path))
+
+    return read
 
 
-def test_folder_golden_tree(spark):
-    """16 folders per file; root is its own parent (read_unittest_pst.test:14-37)."""
-    f = pst.read_pst_folders(spark, "fixtures/fix000.pst")
-    assert f.count() == 16
-    root = f.filter(F.col("node_id") == 290).collect()
+def _by_file(df, col="pst_path"):
+    """{archive file name: row count} of a scan."""
+    rows = df.groupBy(col).count().collect()
+    return {os.path.basename(r[col]): r["count"] for r in rows}
+
+
+def test_folder_golden_tree(corpus, scan):
+    """Root folder 290 is its own parent; the standard hierarchy is
+    present (read_unittest_pst.test:14-37)."""
+    d, manifest = corpus
+    f = scan(d / manifest[0]["file"], "folders")
+    rows = f.collect()
+    assert len(rows) == manifest[0]["folders"]
+    root = [r for r in rows if r.node_id == 290]
     assert len(root) == 1 and root[0].parent_node_id == 290
-    names = {r.display_name for r in f.collect()}
-    assert {"Inbox", "Tasks", "Search Root", "Top of Outlook data file", ""} <= names
+    names = {r.display_name for r in rows}
+    assert {"", "Top of Outlook data file", "Inbox", "Tasks", "Calendar", "Conflicts"} <= names
 
 
-def test_glob_scan_covers_all_files(spark):
+def test_glob_scan_covers_all_files(corpus, scan):
     """Glob expansion at bind (table_function.cpp:48-61)."""
-    assert pst.read_pst_messages(spark, "fixtures/*.pst").count() == N_FILES * N_MSGS
-    assert pst.read_pst_messages(spark, "fixtures/fix001.pst").count() == N_MSGS
-    assert pst.read_pst_messages(spark).count() == N_FILES * N_MSGS
-
-
-def test_class_filtered_readers(spark):
-    """A5 planning-time class filter per typed function (README.md:25-37 mix)."""
-    counts = {
-        pst.read_pst_notes: 5,
-        pst.read_pst_contacts: 2,
-        pst.read_pst_appointments: 1,
-        pst.read_pst_sticky_notes: 2,
-        pst.read_pst_tasks: 1,
-        pst.read_pst_distribution_lists: 1,
-    }
-    for reader, n in counts.items():
-        assert reader(spark, "fixtures/fix000.pst").count() == n, reader.__name__
-
-
-def test_body_truncation_byte_math(spark):
-    """read_body_size_bytes=100 → exactly 50 chars of UTF-16
-    (row_serializer.cpp:95-108; table_function_parameters.test:19-28)."""
-    m = pst.read_pst_messages(spark, "fixtures/fix000.pst", read_body_size_bytes=100)
-    lens = {
-        r.n
-        for r in m.filter(F.col("body_html").isNotNull())
-        .select(F.length("body_html").alias("n"))
-        .collect()
-    }
-    assert lens == {50}
-    # 0 = unlimited (row_serializer.cpp:296-311)
-    full = pst.read_pst_messages(spark, "fixtures/fix000.pst", read_body_size_bytes=0)
-    assert (
-        full.filter(F.col("body_html").isNotNull())
-        .filter(F.length("body_html") > 50)
-        .count()
-        > 0
-    )
-
-
-def test_attachment_bytes_gating(spark):
-    """A14: bytes NULL unless read_attachment_body=true
-    (table_function_parameters.test:30-40)."""
-    first = F.element_at(F.col("attachments"), 1)["bytes"]
-    gated = pst.read_pst_messages(spark, "fixtures/fix000.pst")
-    assert (
-        gated.filter("has_attachments").filter(first.isNotNull()).count() == 0
-    )
-    opened = pst.read_pst_messages(
-        spark, "fixtures/fix000.pst", read_attachment_body=True
-    )
-    assert (
-        opened.filter("has_attachments").filter(first.isNotNull()).count() > 0
-    )
-
-
-def test_read_limit(spark):
-    """A6: read_limit caps planned rows (table_function_parameters.test:13-17)."""
-    assert pst.read_pst_messages(spark, read_limit=5).count() == 5
-    assert pst.read_pst_messages(spark, read_limit=10_000).count() == N_FILES * N_MSGS
-
-
-def test_one_pst_name_per_path(spark):
-    """Invariant: one pst_name per pst_path (read_pst_folders.test:25-29)."""
-    f = pst.read_pst_folders(spark)
-    assert (
-        f.groupBy("pst_path")
-        .agg(F.countDistinct("pst_name").alias("n"))
-        .filter(F.col("n") != 1)
-        .count()
-        == 0
-    )
-
-
-def test_schema_inheritance(spark):
-    """Subtype schemas = PST block + NOTE block + subtype block
-    (schema.hpp:254-260 composition rule)."""
-    msg_cols = pst.read_pst_messages(spark).columns
-    assert msg_cols[:5] == [
-        "pst_path",
-        "pst_name",
-        "record_key",
-        "node_id",
-        "parent_node_id",
-    ]
-    for reader, extra in [
-        (pst.read_pst_contacts, "given_name"),
-        (pst.read_pst_appointments, "start_time"),
-        (pst.read_pst_sticky_notes, "note_color"),
-        (pst.read_pst_tasks, "due_date"),
-        (pst.read_pst_distribution_lists, "member_node_ids"),
-    ]:
-        cols = reader(spark).columns
-        assert cols[: len(msg_cols)] == msg_cols, reader.__name__
-        assert extra in cols, reader.__name__
-
-
-def test_projection_prunes_scan(spark):
-    """A7: a 2-column projection must reach the parquet scan as a pruned
-    ReadSchema (Catalyst column pruning — the reference's
-    projection_pushdown flag, pst_extension.cpp:35)."""
-    m = pst.read_pst_messages(spark).select("node_id", "subject")
-    plan = m._jdf.queryExecution().executedPlan().toString()
-    assert "ReadSchema" in plan
-    schema_part = plan.split("ReadSchema:", 1)[1].splitlines()[0]
-    assert "subject" in schema_part
-    assert "body" not in schema_part and "attachments" not in schema_part
+    d, manifest = corpus
+    assert _by_file(scan(d / "*.pst")) == {a["file"]: a["messages"] for a in manifest}
+    one = manifest[1]
+    assert scan(d / one["file"]).count() == one["messages"]
 
 
 @pytest.mark.parametrize("bad", ["fixtures/nope*.pst", "no/such.pst"])
-def test_empty_glob_is_empty_not_error(spark, bad):
-    """Unmatched glob → empty result (reference skips bad files, A18)."""
-    assert pst.read_pst_messages(spark, bad).count() == 0
+def test_empty_glob_is_empty_not_error(corpus, scan, bad):
+    """Unmatched glob → empty result (the reference skips bad files, A18)."""
+    d, _m = corpus
+    assert scan(d / bad).count() == 0
 
 
-def test_streaming_pst_ingest(spark, tmp_path):
+def test_class_filtered_readers(corpus, scan):
+    """A5 planning-time class filter per typed table."""
+    d, manifest = corpus
+    for table, cls in CLASS_FILTER.items():
+        want = {a["file"]: a["class_counts"][cls] for a in manifest}
+        assert _by_file(scan(d / "*.pst", table)) == want, table
+
+
+def test_body_truncation_byte_math(corpus, scan):
+    """read_body_size_bytes=100 → at most 50 UTF-16 chars of body and
+    body_html (row_serializer.cpp:95-108; table_function_parameters.test:
+    19-28); 0 = unlimited (row_serializer.cpp:296-311)."""
+    d, _m = corpus
+
+    def bodies(**opts):
+        df = scan(d / "*.pst", **opts).select("pst_path", "node_id", "body", "body_html")
+        return {(r.pst_path, r.node_id): (r.body, r.body_html) for r in df.collect()}
+
+    full = bodies()
+    assert bodies(read_body_size_bytes=0) == full
+    cut = bodies(read_body_size_bytes=100)
+    assert cut.keys() == full.keys()
+    for i, col in enumerate(("body", "body_html")):
+        pairs = [(cut[k][i], full[k][i]) for k in full if full[k][i] is not None]
+        assert all(c == f[:50] for c, f in pairs), col
+        assert any(len(f) > 50 for _c, f in pairs), col
+        assert {len(c) for c, f in pairs if len(f) >= 50} == {50}, col
+
+
+def test_attachment_bytes_gating(corpus, scan):
+    """A14: attachment bytes are NULL unless read_attachment_body=true
+    (table_function_parameters.test:30-40)."""
+    d, manifest = corpus
+    total = sum(a["attachments"] for a in manifest)
+    assert total > 0
+
+    def attachment_bytes(**opts):
+        df = scan(d / "*.pst", **opts).select(F.explode("attachments").alias("a"))
+        return [r.b for r in df.select(F.col("a.bytes").alias("b")).collect()]
+
+    gated = attachment_bytes()
+    assert len(gated) == total and all(b is None for b in gated)
+    opened = attachment_bytes(read_attachment_body="true")
+    assert len(opened) == total and all(b is not None for b in opened)
+
+
+def test_read_limit(corpus, scan):
+    """A6: read_limit caps planned rows (table_function_parameters.test:13-17)."""
+    d, manifest = corpus
+    total = sum(a["messages"] for a in manifest)
+    assert scan(d / "*.pst", read_limit=5).count() == 5
+    assert scan(d / "*.pst", read_limit=total + 100).count() == total
+
+
+def test_one_pst_name_per_path(corpus, scan):
+    """Per file: exactly one pst_name, and node_id unique
+    (read_pst_folders.test:19-29)."""
+    d, manifest = corpus
+    names = {a["file"]: {a["pst_name"]} for a in manifest}
+    for table in ("folders", "messages"):
+        df = scan(d / "*.pst", table)
+        got = df.groupBy("pst_path").agg(
+            F.collect_set("pst_name").alias("names"),
+            F.count(F.lit(1)).alias("n"),
+            F.countDistinct("node_id").alias("nodes"),
+        ).collect()
+        assert {os.path.basename(r.pst_path): set(r.names) for r in got} == names, table
+        assert all(r.n == r.nodes for r in got), table
+
+
+def test_schema_inheritance(corpus, scan):
+    """Typed schemas = the messages schema + the subtype block
+    (schema.hpp:254-260 composition rule)."""
+    d, _m = corpus
+    msg_cols = scan(d / "*.pst").columns
+    assert msg_cols == MESSAGE_SCHEMA.names
+    assert msg_cols[:5] == ["pst_path", "pst_name", "record_key", "node_id", "parent_node_id"]
+    extra = {
+        "notes": None,
+        "contacts": "given_name",
+        "appointments": "start_time",
+        "sticky_notes": "note_color",
+        "tasks": "due_date",
+        "distribution_lists": "member_node_ids",
+    }
+    assert extra.keys() == CLASS_FILTER.keys()
+    for table, col in extra.items():
+        cols = scan(d / "*.pst", table).columns
+        assert cols[: len(msg_cols)] == msg_cols, table
+        assert col is None or col in cols, table
+
+
+def test_projection_prunes_scan(corpus, scan):
+    """A7: with ``columns``, the scan schema is the projection and the
+    reader decodes no body, recipient or attachment (row_serializer.cpp:
+    1214-1216). The decode counters are process-local, so the reader is
+    driven in-process for them."""
+    d, manifest = corpus
+    cols = "node_id,subject"
+    df = scan(d / "*.pst", columns=cols)
+    assert df.columns == ["node_id", "subject"]
+    assert df.count() == sum(a["messages"] for a in manifest)
+
+    ds = PstDataSource({"path": str(d / "*.pst"), "table": "messages", "columns": cols})
+    reader = ds.reader(ds.schema())
+    for k in messaging.DECODE_STATS:
+        messaging.DECODE_STATS[k] = 0
+    rows = [r for p in reader.partitions() for r in reader.read(p)]
+    assert len(rows) == sum(a["messages"] for a in manifest)
+    assert messaging.DECODE_STATS == {
+        "body": 0, "body_html": 0, "recipients": 0, "attachments": 0, "subnodes": 0,
+    }
+
+
+def test_recipients_explode(corpus, scan):
+    """unnest(recipients) gives one row per recipient with its struct
+    fields projected (B16/B17)."""
+    d, manifest = corpus
+    r = scan(d / "*.pst").select("pst_path", F.explode("recipients").alias("r")).select(
+        "pst_path", "r.display_name", "r.email_address", "r.recipient_type"
+    )
+    assert _by_file(r) == {a["file"]: a["recipients"] for a in manifest}
+    rows = r.collect()
+    assert all(x.display_name and "@" in x.email_address for x in rows)
+    assert {x.recipient_type for x in rows} <= {"TO", "CC", "BCC"}
+
+
+def test_streaming_pst_ingest(spark, corpus, tmp_path):
     """spark.readStream.format("pst"): each newly arrived archive becomes
-    a microbatch planned/read by the unchanged batch code path."""
-    import shutil
-
-    from duckdb_pst_spark.sources.mspst.datasource import register
-
+    a microbatch planned and read by the unchanged batch code path."""
     register(spark)
-    gold = "/root/reference/test/unittest.pst"
-    shutil.copy(gold, tmp_path / "a.pst")
+    d, manifest = corpus
+    a, b = manifest[0], manifest[2]
+    shutil.copy(d / a["file"], tmp_path / "a.pst")
     q = (
         spark.readStream.format("pst")
         .option("table", "messages")
@@ -164,32 +212,27 @@ def test_streaming_pst_ingest(spark, tmp_path):
     )
     try:
         q.processAllAvailable()
-        assert spark.sql("select sum(count) c from pst_stream").collect()[0].c == 12
-        shutil.copy(gold, tmp_path / "b.pst")  # late-arriving archive
+        assert spark.sql("select sum(count) c from pst_stream").collect()[0].c == a["messages"]
+        shutil.copy(d / b["file"], tmp_path / "b.pst")  # late-arriving archive
         q.processAllAvailable()
-        got = spark.sql(
-            "select pst_path, count from pst_stream order by pst_path"
-        ).collect()
-        assert [r["count"] for r in got] == [12, 12]
+        got = spark.sql("select pst_path, count from pst_stream order by pst_path").collect()
+        assert [r["count"] for r in got] == [a["messages"], b["messages"]]
     finally:
         q.stop()
 
 
-def test_streaming_restart_from_checkpoint_is_exactly_once(spark, tmp_path):
+def test_streaming_restart_from_checkpoint_is_exactly_once(spark, corpus, tmp_path):
     """Kill the stream, add an archive, restart with the SAME checkpoint:
     already-ingested archives must not re-emit (offset log resume) and
     the new archive's rows appear exactly once."""
-    import shutil
-
-    from duckdb_pst_spark.sources.mspst.datasource import register
-
     register(spark)
-    gold = "/root/reference/test/unittest.pst"
+    d, manifest = corpus
+    a, b = manifest[0], manifest[2]
     land = tmp_path / "land"
     land.mkdir()
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
-    shutil.copy(gold, land / "a.pst")
+    shutil.copy(d / a["file"], land / "a.pst")
 
     def run_once():
         q = (
@@ -206,13 +249,7 @@ def test_streaming_restart_from_checkpoint_is_exactly_once(spark, tmp_path):
         q.awaitTermination()
 
     run_once()
-    first = spark.read.parquet(out).count()
-    assert first == 12
-    shutil.copy(gold, land / "b.pst")
+    assert spark.read.parquet(out).count() == a["messages"]
+    shutil.copy(d / b["file"], land / "b.pst")
     run_once()
-    rows = spark.read.parquet(out).collect()
-    assert len(rows) == 24  # 12 old (not re-emitted) + 12 new
-    by_file = {}
-    for r in rows:
-        by_file[r.pst_path] = by_file.get(r.pst_path, 0) + 1
-    assert sorted(by_file.values()) == [12, 12]
+    assert _by_file(spark.read.parquet(out)) == {"a.pst": a["messages"], "b.pst": b["messages"]}

@@ -9,8 +9,6 @@ from __future__ import annotations
 
 import json
 
-import pytest
-
 from duckdb_pst_spark.registry import (
     DRIVER_WINDOW,
     REGISTRY,
@@ -78,9 +76,16 @@ def test_rows_only_sort_last():
     assert verify_order(specs, records) == ["q_unseen", "q_green", "q_rows", "q_rows2"]
 
 
-def test_record_naming_unregistered_query_raises():
-    with pytest.raises(KeyError, match="q_gone"):
-        verify_order(_specs("q_a"), [{"q_a": GREEN, "q_gone": GREEN}])
+def test_retired_names_ignored_renamed_query_sorts_first():
+    """q_gone was retired and q_old renamed to q_new: the records' rows
+    for the old names count for nothing, and q_new, never green under
+    its own name, sorts before every green query."""
+    specs = _specs("q_a", "q_b", "q_new")
+    records = [
+        {"q_a": GREEN, "q_gone": GREEN, "q_old": GREEN},
+        {"q_b": GREEN, "q_gone": ERROR, "q_old": GREEN},
+    ]
+    assert verify_order(specs, records) == ["q_new", "q_a", "q_b"]
 
 
 def test_records_read_in_numeric_round_order(tmp_path):

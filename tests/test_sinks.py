@@ -4,8 +4,8 @@ exported layout, and the shuffle-free bucketed join."""
 from __future__ import annotations
 
 import os
-import sys
 
+import pstgen
 import pytest
 from pyspark.sql import functions as F
 
@@ -25,9 +25,6 @@ def test_export_roundtrip(spark, sf_dir, tmp_path):
 def test_ingest_pst_archive_partitions_by_class(spark, tmp_path):
     """The ingest lands what a format("pst") scan of the archives reads:
     per-class message counts, every typed table, nested recipients."""
-    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "perfbench"))
-    import pstgen
-
     archive = pstgen.write_archive(str(tmp_path / "mail.pst"), {
         "name": "Ingest", "seed": 7, "shape_seed": "ingest", "n_messages": 40,
         "attach_p": 0.3, "body_median": 300, "body_sigma": 0.8, "body_cap": 4000,

@@ -30,7 +30,6 @@ from duckdb_pst_spark.session import get_spark  # noqa: E402
 EAGER = {
     "q_recursive_descendants": "ITER",
     "q_recursive_ancestors": "ITER",
-    "q_pst_folder_tree": "ITER",
     "q_dedup_cluster": "ITER",
     "q_dedup_cluster_star": "ITER",
     "q_cluster_size_histogram": "ITER",
