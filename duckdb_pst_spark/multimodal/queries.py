@@ -161,7 +161,7 @@ def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(200 AS INT) AS width, CAST(150 AS INT) AS height,
            CAST(3 AS INT) AS channels, CAST(11960 AS BIGINT) AS nbytes
     """,
-    tags=("multimodal", "pst-binary", "udf"),
+    tags=("multimodal", "pst-binary", "pst-reference", "udf"),
 )
 def q_media_probe_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL container bytes end-to-end: the golden archive's actual JPEG
@@ -172,8 +172,9 @@ def q_media_probe_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     that works on real payloads today; pixel decode remains behind the
     optional-codec gate."""
     from duckdb_pst_spark.multimodal.pst_bridge import pst_attachments
+    from duckdb_pst_spark.sources.mspst.queries import REFERENCE_PST
 
-    att = pst_attachments(spark, "/root/reference/test/unittest.pst")
+    att = pst_attachments(spark, REFERENCE_PST)
     probed = ops.probe_media(att)
     return (
         att.select("media_id", "filename", F.octet_length("bytes").cast("long").alias("nbytes"))
@@ -191,7 +192,7 @@ def q_media_probe_real(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(200 AS INT) AS width, CAST(150 AS INT) AS height,
            CAST(12288135 AS BIGINT) AS px_sum
     """,
-    tags=("multimodal", "pst-binary", "udf", "pipeline"),
+    tags=("multimodal", "pst-binary", "pst-reference", "udf", "pipeline"),
 )
 def q_media_salvage_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The golden archive's REAL camera JPEG pixel-decoded inside a Spark
@@ -208,8 +209,9 @@ def q_media_salvage_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np  # noqa: PLC0415 — executor-side import
 
     from duckdb_pst_spark.multimodal.pst_bridge import pst_attachments
+    from duckdb_pst_spark.sources.mspst.queries import REFERENCE_PST
 
-    att = pst_attachments(spark, "/root/reference/test/unittest.pst").filter(
+    att = pst_attachments(spark, REFERENCE_PST).filter(
         F.upper("filename").endswith(".JPG")
     )
 

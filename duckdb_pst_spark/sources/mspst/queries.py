@@ -1,21 +1,37 @@
 """Registered queries over the binary PST reader (SURVEY.md §2.C),
-``spark.read.format("pst")`` on the reference's own test archive.
+``spark.read.format("pst")`` on ``GOLDEN_PST``.
 
 The oracle for these can't re-read PST (DuckDB here has no PST
 extension), so the golden queries pin the Spark result to literal VALUES
 copied from the reference's own expected output
 (/root/reference/test/sql/read_unittest_pst.test) — a hash-check against
 the reference's published truth, which is stronger than rows-only.
+
+``GOLDEN_PST`` is the reference's own test/unittest.pst where its
+checkout is present, else the committed ``golden/unittest.pst`` beside
+this module. ``python -m tests.golden_pst`` writes that file with every
+value the reference's tests publish, under the same node ids. Its
+writer (perfbench/pstgen.py's block and LTP builders) encodes with the
+reader's own permute table, so on the committed archive these queries
+show that writer and reader agree; decoding real Outlook files is
+checked only where the reference file exists.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from duckdb_pst_spark.registry import query
 
-GOLDEN_PST = "/root/reference/test/unittest.pst"
+#: The reference's own fixture, where its checkout is present.
+REFERENCE_PST = "/root/reference/test/unittest.pst"
+#: The in-repo archive carrying the same published values
+#: (written by ``python -m tests.golden_pst``).
+COMMITTED_PST = os.path.join(os.path.dirname(os.path.abspath(__file__)), "golden", "unittest.pst")
+GOLDEN_PST = REFERENCE_PST if os.path.exists(REFERENCE_PST) else COMMITTED_PST
 
 
 def _pst(spark: SparkSession, table: str, **options) -> DataFrame:

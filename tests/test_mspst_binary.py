@@ -1,7 +1,12 @@
-"""Binary PST reader golden tests — every assertion mirrors
-/root/reference/test/sql/read_unittest_pst.test on the same fixture file,
-parsed by the pure-Python [MS-PST] implementation (ndb/ltp/messaging) and
-exposed through the ``pst`` Python DataSource."""
+"""Binary PST reader golden tests — every assertion mirrors the
+reference's test/sql/read_unittest_pst.test, parsed by the pure-Python
+[MS-PST] implementation (ndb/ltp/messaging) and exposed through the
+``pst`` Python DataSource.
+
+The archive is ``GOLDEN_PST`` (sources/mspst/queries.py): the reference's
+own test/unittest.pst where its checkout is present, else the committed
+duckdb_pst_spark/sources/mspst/golden/unittest.pst, which carries the
+same published values (tests/golden_pst.py)."""
 
 from __future__ import annotations
 
@@ -9,7 +14,7 @@ import datetime as dt
 
 import pytest
 
-PST = "/root/reference/test/unittest.pst"
+from duckdb_pst_spark.sources.mspst.queries import GOLDEN_PST as PST
 
 GOLD_RECORD_KEY = bytes.fromhex("D8D31B118C3A3B4A9D8816686207E762")
 

@@ -131,7 +131,8 @@ def test_unicode_golden_still_reads():
     reference's golden file still parses with the pinned node count."""
     import os
 
-    golden = "/root/reference/test/unittest.pst"
+    from duckdb_pst_spark.sources.mspst.queries import REFERENCE_PST as golden
+
     if not os.path.exists(golden):
         pytest.skip("reference golden not present")
     with PstFile(golden) as f:

@@ -4,6 +4,10 @@ partial rows (node level) — never crash the scan, and never poison the
 healthy files scanned alongside them (the reference's semantics,
 /root/reference/src/table_function.cpp:228-235 and
 row_serializer.cpp:1252-1263).
+
+The healthy archive is ``GOLDEN_PST`` (sources/mspst/queries.py): the
+reference's test/unittest.pst where its checkout is present, else the
+committed duckdb_pst_spark/sources/mspst/golden/unittest.pst.
 """
 
 from __future__ import annotations
@@ -12,7 +16,8 @@ import shutil
 
 import pytest
 
-GOLDEN = "/root/reference/test/unittest.pst"
+from duckdb_pst_spark.sources.mspst.queries import GOLDEN_PST as GOLDEN
+
 GOLDEN_MESSAGES = 12  # reference's pinned message count for unittest.pst
 
 
@@ -58,8 +63,11 @@ def test_corrupt_archive_never_crashes_the_scan(spark, tmp_path, mode):
 def test_fatal_archives_skip_cleanly(spark, tmp_path):
     """Unreadable-at-plan-time archives (bad magic) are dropped whole; a
     merely truncated archive may still yield every message whose nodes
-    survive (the golden file's NBT and message data all sit in the first
-    quarter — recovering them IS the tolerance working)."""
+    survive — recovering them IS the tolerance working. Whether any
+    survive depends on the layout: the reference file's NBT and message
+    data sit in its first quarter, the committed archive's B-tree pages
+    come last, so only "rows come from the truncated file alone" holds
+    on both."""
     from duckdb_pst_spark.sources.mspst.datasource import register
 
     register(spark)

@@ -3,9 +3,15 @@
 The reference streams PSTs through DuckDB's virtual FileSystem, httpfs
 included (README https demo /root/reference/README.md:58-69; file shim
 src/pst/duckdb_filesystem.cpp:12-36).  These tests serve the same
-fixture PST from a local HTTP server — once with ``Range`` support
+golden PST from a local HTTP server — once with ``Range`` support
 (object-store behavior) and once without (forces the whole-body
 fallback) — and assert byte- and row-level equality with local reads.
+
+The archive is ``GOLDEN_PST`` (sources/mspst/queries.py): the
+reference's test/unittest.pst where its checkout is present, else the
+committed duckdb_pst_spark/sources/mspst/golden/unittest.pst. Both are
+larger than fsio's 256 KiB block, so the ranged reads span blocks and a
+server that ignores ``Range`` answers with more than was asked.
 """
 
 from __future__ import annotations
@@ -18,7 +24,8 @@ import threading
 
 import pytest
 
-PST = "/root/reference/test/unittest.pst"
+from duckdb_pst_spark.sources.mspst.queries import GOLDEN_PST as PST
+
 DOCROOT = os.path.dirname(PST)
 
 

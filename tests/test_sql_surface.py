@@ -1,13 +1,15 @@
 """SQL-surface parity: the reference's own README/test SQL, run through
-spark.sql against the registered views and UDTFs on the golden PST."""
+spark.sql against the registered views and UDTFs on the golden PST —
+``GOLDEN_PST`` (sources/mspst/queries.py): the reference's
+test/unittest.pst where its checkout is present, else the committed
+duckdb_pst_spark/sources/mspst/golden/unittest.pst."""
 
 from __future__ import annotations
 
 import pytest
 
+from duckdb_pst_spark.sources.mspst.queries import GOLDEN_PST as PST
 from duckdb_pst_spark.sql import register_pst_udtfs, register_pst_views
-
-PST = "/root/reference/test/unittest.pst"
 
 
 @pytest.fixture(scope="module", autouse=True)
