@@ -240,24 +240,6 @@ def main() -> None:
             free_checkpoints(spark)
         except Exception as exc:
             print(f"BENCH WARN free_checkpoints: {exc}", file=sys.stderr)
-        # Optional mid-bench cleanup barrier (r12, VERDICT r11 item 5):
-        # a JVM GC hint between rows, OUTSIDE every timed region, to
-        # flush the broadcast/shuffle-state garbage a 70-row session
-        # accumulates. Env-gated OFF after a same-host A/B: raw
-        # geomean 1.29x vs the no-barrier baseline, but the barrier
-        # session's pre-barrier calib_wall was itself 1.31x (host
-        # drift), so calib-normalized the barrier is a WASH (~0.99)
-        # with no late-row improvement — and the r11 4.0-vs-0.9
-        # q_ngram_novelty drag artifact did not reproduce on this
-        # host at all (full-session rows ran FASTER than a
-        # 10-heavy-row session; OPTIMIZATION_r12.md "session drag").
-        # Kept as a diagnostic switch for hosts where the drag class
-        # does appear.
-        if os.environ.get("SPARK_GRAFT_BENCH_GC") == "1":
-            try:
-                spark.sparkContext._jvm.System.gc()
-            except Exception as exc:
-                print(f"BENCH WARN gc barrier: {exc}", file=sys.stderr)
 
     # Same-corpus twin/plain ratios (VERDICT r10 item 3): for every
     # benched bucketed twin, time its plain sibling in THIS session on

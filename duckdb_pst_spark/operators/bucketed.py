@@ -1,12 +1,12 @@
 """Bucketed-layout twins for the TPC-H fact-exchange class.
 
-The round-8 exchange-budget program (SCALE.md; tools/ab_bucketed_*.py)
-measured the star joins' dominant cost as the single fact-side orderkey
-shuffle, and the orderkey-bucketed layout as its cure: Q21 0.31x,
-Q4 0.39x, Q12 0.37x, Q9 0.50x at x100, same session, results pinned
-equal. These queries SHIP that cure as first-class, oracle-checked,
-plan-gated artifacts instead of tools/ scripts: each twin shares its
-plain sibling's oracle verbatim (the answer is layout-invariant — only
+The exchange-budget program (SCALE.md, "Round 8: the TPC-H star-join
+exchange budget" and the round-8 sections after it) measured the star
+joins' dominant cost as the single fact-side orderkey shuffle, and the
+orderkey-bucketed layout as its cure: Q21 0.31x, Q4 0.39x, Q12 0.37x,
+Q9 0.50x at x100, same session, results pinned equal. These queries
+ship that cure as oracle-checked, plan-gated queries: each twin shares
+its plain sibling's oracle verbatim (the answer is layout-invariant — only
 the physical plan changes) and materializes the layout through
 ``sinks.export_bucketed`` on first use in a session, reusing it for
 every later orderkey query against the same source.
@@ -32,9 +32,10 @@ aggregation over a LOW-cardinality key (Q15's per-suppkey revenue —
 the combine reduces 15M windowed rows to <=|partitions|x|suppliers|
 before shuffling), or a semi-prune that shrinks the fact first
 (Q16's part-spec at 1.33x, Q20's red-parts x year window at 0.85x —
-both measured no-ship, tools/ab_bucketed_q16.py /
-tools/ab_q20_partkey.py). Price the exchange's post-combine,
-post-prune row count before writing a layout for it.
+both measured no-ship, SCALE.md "Q16 partkey-layout twin: measured
+NO-SHIP" and "Q20 on the partkey layout: measured NO-SHIP"). Price the
+exchange's post-combine, post-prune row count before writing a layout
+for it.
 """
 
 from __future__ import annotations
@@ -48,7 +49,7 @@ from duckdb_pst_spark.operators import relational  # noqa: F401  (oracle reuse)
 from duckdb_pst_spark.registry import REGISTRY, query
 from duckdb_pst_spark.tables import table
 
-N_BUCKETS = int(os.environ.get("SPARK_GRAFT_BUCKETS", "32"))
+N_BUCKETS = 32
 
 # Twin BENCH rows read at the x10 replica corpus (repo .cache/x10): at
 # sf0.1 AQE broadcasts the tiny fact sides and the twins invert
@@ -108,7 +109,7 @@ def _oracle_of(plain_name: str) -> str:
 # that compares a twin against its plain sibling on the SAME corpus:
 # bench.py emits the same-session twin/plain ratios into the bench JSON
 # (a layout regression then moves a driver-recorded number), and
-# tools/ab_bucketed_registered.py runs the interleaved min-of-3 A/B.
+# `tools/ab.py <plain> <twin>` runs the interleaved min-of-N A/B.
 TWIN_PAIRS: tuple[tuple[str, str], ...] = (
     ("q_tpch_q4", "q_tpch_q4_bucketed"),
     ("q_tpch_q12", "q_tpch_q12_bucketed"),
@@ -145,7 +146,7 @@ def q_tpch_q4_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders EXISTS-semi against lineitem runs as a merge-hinted
     SortMergeJoin over co-bucketed, per-bucket-sorted scans — no
     exchange, no sort, on either fact side (measured 0.39x plain at
-    x100, tools/ab_bucketed_tpch.py). The merge hint pins the shape
+    x100, SCALE.md "Round 8 additions"). The merge hint pins the shape
     the layout exists for; without it AQE would broadcast the tiny
     test-scale orders side and mark the bucketed scan unused."""
     o_b, li_b = bucketed_tables(spark, sf_dir)
@@ -178,7 +179,7 @@ def q_tpch_q12_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact scan joins orders bucket-aligned (zero exchange, zero sort);
     the CASE split still combines map-side so the only shuffle in the
     whole plan is the <=2-group final rollup (measured 0.37x plain at
-    x100, tools/ab_bucketed_tpch.py)."""
+    x100, SCALE.md "Round 8 additions")."""
     o_b, li_b = bucketed_tables(spark, sf_dir)
     li = (
         li_b
@@ -215,12 +216,12 @@ def q_tpch_q9_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts them while they fit — a broadcast attach preserves the
     probe side's bucket partitioning, so the orders join after it is
     still exchange-free); the li⋈o join is the merge-hinted
-    bucket-aligned SortMergeJoin (measured 0.50x plain at x100,
-    tools/ab_bucketed_q7q9.py). When a deployment's part side outgrows
-    broadcast, the partkey shuffle re-keys the fact and the layout's
-    win shrinks to the sort — the docstring contract, not a silent
-    cliff; profit arithmetic identical to the plain twin (FLOOR-cast
-    quantities)."""
+    bucket-aligned SortMergeJoin (measured 0.50x plain at x100, SCALE.md
+    "Round 8: the TPC-H suite completion"). When a deployment's part
+    side outgrows broadcast, the partkey shuffle re-keys the fact and
+    the layout's win shrinks to the sort — the docstring contract, not a
+    silent cliff; profit arithmetic identical to the plain twin
+    (FLOOR-cast quantities)."""
     o_b, li_b = bucketed_tables(spark, sf_dir)
     p = (
         table(spark, sf_dir, "part")
@@ -274,11 +275,11 @@ def q_tpch_q9_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_tpch_q5_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q_tpch_q5 on the orderkey-bucketed layout: inner joins commute,
     so the star is re-rooted at the bucket-aligned li⋈o join (zero
-    exchange, zero sort — measured 0.64x plain at x100,
-    tools/ab_bucketed_tpch.py); the date window prunes the bucketed
-    orders scan, then customer/supplier attach declaratively ABOVE it
-    (broadcast at test scale; at cluster scale their shuffles carry
-    only the window's surviving rows, never the full fact)."""
+    exchange, zero sort — measured 0.64x plain at x100, SCALE.md "Round
+    8: the TPC-H star-join exchange budget"); the date window prunes the
+    bucketed orders scan, then customer/supplier attach declaratively
+    ABOVE it (broadcast at test scale; at cluster scale their shuffles
+    carry only the window's surviving rows, never the full fact)."""
     o_b, li_b = bucketed_tables(spark, sf_dir)
     r = table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     n = table(spark, sf_dir, "nation").join(
@@ -328,7 +329,8 @@ def q_tpch_q10_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q_tpch_q10 on the orderkey-bucketed layout: the returnflag
     filter prunes the bucketed lineitem scan, the quarter window the
     bucketed orders scan, and the li⋈o join is bucket-aligned
-    (measured 0.56x plain at x100, tools/ab_bucketed_tpch.py);
+    (measured 0.56x plain at x100, SCALE.md "Round 8: the TPC-H
+    star-join exchange budget");
     customer attaches declaratively above, nation broadcasts, and the
     customer rollup + top-20 end the plan."""
     o_b, li_b = bucketed_tables(spark, sf_dir)
@@ -540,10 +542,10 @@ def q_tpch_q8_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_tpch_q21_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q_tpch_q21 on the orderkey-bucketed layout — the biggest
-    measured win in the class (11.45 → 3.59 s, 0.31x, at x100;
-    tools/ab_bucketed_q21.py) because the layout pays TWICE: the li⋈o
-    join is bucket-aligned (no exchange, no sort) and the
-    decorrelating window over l_orderkey rides the same bucket
+    measured win in the class (11.45 → 3.59 s, 0.31x, at x100; SCALE.md
+    "Round 8: the TPC-H suite completion") because the layout pays
+    TWICE: the li⋈o join is bucket-aligned (no exchange, no sort) and
+    the decorrelating window over l_orderkey rides the same bucket
     partitioning (HashPartitioning on the window key — no window
     exchange either). The plan's only shuffles are the
     |suppliers|-bounded rollup and the top-100 sort."""
@@ -819,7 +821,7 @@ def q_tpch_q13_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ONLY shuffle in the plan is the ~dozen-row count-of-counts
     rollup (plan-gated in tests/test_bucketed_twins.py — the Q12
     contract class). Measured same-session interleaved min-of-3 vs
-    plain, results pinned equal (tools/ab_q13_custkey.py): 0.32x at
+    plain, results pinned equal (SCALE.md "Twelfth twin"): 0.32x at
     x10 (1.77 -> 0.57 s), 0.30x at x100 (2.76 -> 0.82 s). Layout once:
     13.6 s at x10, 17.9 s at x100 (orders + customer are the two
     SMALL fact-adjacent tables — this family is an order of magnitude
@@ -862,7 +864,7 @@ def q_tpch_q22_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     remaining shuffles are all constant-size (threshold
     SinglePartition, rollup hash, orderBy range) — plan-gated in
     tests/test_bucketed_twins.py. Measured same-session interleaved
-    min-of-3 vs plain, results pinned equal (tools/ab_q22_custkey.py):
+    min-of-3 vs plain, results pinned equal (SCALE.md "Thirteenth twin"):
     0.85x at x10 (0.78 -> 0.67 s), 0.48x at x100 (1.85 -> 0.89 s) —
     improving with scale because the deleted exchange is the growth
     term."""

@@ -101,8 +101,8 @@ def q_dedup_exact_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pair is the floor for drop/merge decisions repo-wide). The
     oracle groups by the raw text; the driver compare proves the hash
     grouping reproduces it exactly on every checked corpus. A/B vs the
-    text-keyed plain (tools/ab_r12.py dedup_exact_hash, interleaved
-    min-of-3): see OPTIMIZATION_r12.md — the win grows with scale
+    text-keyed plain (interleaved min-of-3): OPTIMIZATION_r12.md §2 —
+    the win grows with scale
     because the deleted text bytes are the exchange's growth term.
 
     The exact-dedup family now has the same plain/production pairing as
@@ -1414,11 +1414,11 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (n²/2¹²⁹ — the q_pipeline_pretrain/_tkey class; the verdict is
     # final with no downstream re-check, which is exactly why the key
     # is 128-bit, not 64). Measured interleaved min-of-3, results
-    # pinned equal (tools/probe_incr_r12.py): 0.96x sf0.1, 0.91x x10,
+    # pinned equal (OPTIMIZATION_r12.md §6): 0.96x sf0.1, 0.91x x10,
     # 0.86x x100 — the text bytes are the exchange's growth term. The
     # near flag then rides a SKINNY b_doc-keyed join on
     # (doc_id, b_doc, c_doc) rows. (A lazy per_text checkpoint was
-    # A/B'd in the same probe: 0.96/0.81/1.05x — not uniform, no-ship.)
+    # A/B'd alongside: 0.96/0.81/1.05x — not uniform, no-ship.)
     pt_h = per_text.select(
         F.xxhash64("text").alias("_t1"),
         F.xxhash64(F.lit(1), "text").alias("_t2"),

@@ -176,13 +176,13 @@ def q_pipeline_pretrain(
     )
     gated = _obs("gated", gated)
     train = _obs("train_split", gated.filter(F.col("doc_id") % 100 != 0))
-    # Main-chain slimming (r11, guide §2.3/§8: shuffle keys and metadata,
-    # never payloads): everything downstream of the gates needs only the
+    # Main-chain slimming (shuffle keys and metadata, never payloads):
+    # everything downstream of the gates needs only the
     # token COUNT and — for exact dedup — a CONTENT KEY, not the text or
     # the token array. The text (~1 KB/row) is replaced by a content key
     # before the chain's only corpus exchange (the exact-dedup window),
-    # a ~60x byte cut on that wire. Measured (tools/ab_r11.py
-    # pipeline_pretrain, interleaved min-of-3, results pinned equal):
+    # a ~60x byte cut on that wire. Measured (OPTIMIZATION_r11.md §4,
+    # interleaved min-of-3, results pinned equal):
     # sf0.1 3.20→2.80 s (0.87x), x10 0.97x (dup-heavy replica profile),
     # x100 17.6→15.4 s (0.87x) — and the deleted bytes are network on a
     # real cluster, so the single-box ratio is the conservative bound.
@@ -198,7 +198,7 @@ def q_pipeline_pretrain(
     # spurious drop now needs a simultaneous collision under both seeds,
     # collapsing the class to n²/2¹²⁹ ≈ 1e-17 at 1e11 docs. Still 16 B
     # vs ~1 KB on the wire (~60x), and the second hash is scan-local CPU
-    # — measured ≤3% on the row (tools/ab_r12.py tkey128, sf0.1 + x100).
+    # — measured ≤3% on the row (OPTIMIZATION_r12.md §1, sf0.1 + x100).
     # The shingle branch below keeps using `train` (with toks) — its
     # explode is scan-local.
     train_slim = train.select(
@@ -214,12 +214,12 @@ def q_pipeline_pretrain(
         # Hashed trigram ids, not concat'd strings (r11): the join only
         # decides membership, so a fixed-width key replaces the ~30-byte
         # gram string — smaller broadcast, no string materialization per
-        # gram (the q_ngram_novelty id scheme). r12: the membership hit
+        # gram (the q_ngram_novelty id scheme). The membership hit
         # is a FINAL drop decision (left_anti below, no exact re-check),
         # so the id is 128 bits — a two-seed xxhash64 struct, same
         # discipline and ~n²/2¹²⁹ class as the exact-dedup key above; a
         # spurious train-gram/eval-gram collision now needs both seeds
-        # to collide at once. Measured ≤3% (tools/ab_r12.py tkey128).
+        # to collide at once. Measured ≤3% (OPTIMIZATION_r12.md §1).
         grams = F.array_distinct(
             F.expr(
                 "transform(sequence(1, size(toks) - 2),"

@@ -2199,7 +2199,7 @@ def q_tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     stops probing an order's lines at the FIRST late hit and never
     materializes the join payload; output is a ≤5-row rollup. The
     orderkey exchange is this plan's budget; on bucketed tables
-    (tools/ab_bucketed_tpch.py) it disappears."""
+    (q_tpch_q4_bucketed) it disappears."""
     o = table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1996-04-01").cast("timestamp"))
@@ -2607,28 +2607,26 @@ def q_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     (part, the fact⋈fact orderkey join) is declarative — AQE
     broadcasts the filtered part side while it fits and right-sizes
     past that (the forced-broadcast A/B on the orders side measured a
-    tie, tools/ab_q21_q8.py).
+    tie, SCALE.md "Round 8: the TPC-H suite completion").
 
-    r12 (VERDICT r11 item 2, guide §2.3 "aggregate before you
-    shuffle"): the fact is PARTIALLY AGGREGATED to ≤|suppkey|·|2
-    years| rows BEFORE the supplier attach — supplier is the only dim
-    the assembled fact still needed, and nothing in the final rollup
-    depends on anything but (suppkey, year, sum rev), so the supplier
-    join now probes a dimension-sized aggregate instead of every fact
-    row. Past the broadcast cliff (supplier scales with the corpus)
-    this replaces a fact-sized suppkey exchange with a
+    Aggregate before the shuffle: the fact is PARTIALLY AGGREGATED to
+    ≤|suppkey|·|2 years| rows BEFORE the supplier attach — supplier is
+    the only dim the assembled fact still needed, and nothing in the
+    final rollup depends on anything but (suppkey, year, sum rev), so
+    the supplier join now probes a dimension-sized aggregate instead of
+    every fact row. Past the broadcast cliff (supplier scales with the
+    corpus) this replaces a fact-sized suppkey exchange with a
     dimension-sized one. Measured interleaved min-of-3
-    (tools/ab_r12.py suppagg_q8): broadcast-on 1.01x sf0.1 / 0.96x
-    x10 (tie); broadcast-disabled (the post-cliff shape)
-    0.88x x10 / 0.92x x100. Exactness: int64 partial sums regrouped
-    by (supp_nation, year) — sum re-association only; supplier's
-    s_suppkey is unique so the inner attach drops whole groups
-    exactly as it dropped their rows. The same restructure measured
-    as a NO-SHIP for Q5/Q7/Q9 (tools/ab_r12.py suppagg_noship:
-    Q5 1.09–1.30x, Q7 1.07–1.16x everywhere; Q9 0.94x at sf0.1/
-    x100-off but 1.17x at x10-on — not uniform, stands as-is).
-    The final aggregate is ≤ |years| groups, map-side combined, and
-    the CASE split rides inside it — one pass computes both revenue
+    (OPTIMIZATION_r12.md §3): broadcast-on 1.01x sf0.1 / 0.96x x10
+    (tie); broadcast-disabled (the post-cliff shape) 0.88x x10 / 0.92x
+    x100. Exactness: int64 partial sums regrouped by (supp_nation, year)
+    — sum re-association only; supplier's s_suppkey is unique so the
+    inner attach drops whole groups exactly as it dropped their rows.
+    The same restructure measured as a NO-SHIP for Q5/Q7/Q9
+    (OPTIMIZATION_r12.md §3: Q5 1.09–1.30x, Q7 1.07–1.16x everywhere; Q9
+    0.94x at sf0.1/x100-off but 1.17x at x10-on — not uniform, stands
+    as-is). The final aggregate is ≤ |years| groups, map-side combined,
+    and the CASE split rides inside it — one pass computes both revenue
     arms from the partial sums."""
     p = table(spark, sf_dir, "part").filter(F.col("p_type") == "ECONOMY").select(
         "p_partkey"
@@ -2904,8 +2902,9 @@ def q_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY value_c DESC, p_partkey
     """,
     tags=("relational", "agg", "subquery"),
-    # Deployment knob (measured at x100, tools/ab_broadcast_threshold.py,
-    # re-verified through applied_confs in round 9): 64 MB broadcast
+    # Deployment knob (measured at x100, SCALE.md "Round 8: the TPC-H
+    # suite completion", re-verified through applied_confs in "The
+    # Q16/Q11 threshold cure shipped as QuerySpec.confs"): 64 MB broadcast
     # threshold reads 0.78x here (the region-supplier semi side).
     # PER-QUERY — the same knob regressed Q7; see q_tpch_q16.
     confs=(("spark.sql.autoBroadcastJoinThreshold", "64m"),),
@@ -2983,8 +2982,9 @@ def q_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
     """,
     tags=("relational", "agg", "subquery"),
-    # Deployment knob (measured at x100, tools/ab_broadcast_threshold.py,
-    # re-verified through applied_confs in round 9): the static planner's
+    # Deployment knob (measured at x100, SCALE.md "Round 8: the TPC-H
+    # suite completion", re-verified through applied_confs in "The
+    # Q16/Q11 threshold cure shipped as QuerySpec.confs"): the static planner's
     # 10 MB default misses the spec-join broadcast here — 64 MB reads
     # 0.62x. PER-QUERY because the same knob REGRESSED Q7 1.7x (it
     # broadcasts a mid-sized join output there).

@@ -273,8 +273,19 @@ def q_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = spread(table(spark, sf_dir, "embeddings"))
     assigned = _semantic_assign(e)
-    q = assigned.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("q_emb"), F.col("cid").alias("bucket")
+    # The query side is N_QUERIES rows at any scale: broadcast it, as
+    # q_knn_brute does. Left to AQE, the bucket join became a broadcast
+    # only after the candidate side's bucket shuffle had run, so the
+    # executed plan held 4 or 5 exchanges depending on stage timing.
+    # At sf0.1 (4 vCPU, tools/ab.py min-of-5, 3 alternating checkout
+    # pairs): 5 -> 3 exchanges, 0.56 -> 0.04 MiB shuffled, and
+    # 2.29/2.69/2.74 -> 2.15/1.97/2.10 s.
+    q = F.broadcast(
+        assigned.filter(F.col("vec_id") < N_QUERIES).select(
+            F.col("vec_id").alias("qid"),
+            F.col("embedding").alias("q_emb"),
+            F.col("cid").alias("bucket"),
+        )
     )
     c = assigned.filter(F.col("vec_id") >= N_QUERIES).select(
         F.col("vec_id").alias("cand_id"), F.col("embedding").alias("c_emb"), F.col("cid").alias("bucket")
@@ -1492,10 +1503,11 @@ def q_knn_recall_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     across every candidate (a lossy-code ranking problem), not a
     bucketing miss.
 
-    SERVING VERDICT (round 9, tools/probe_pq_recall.py on the clustered
-    x100v corpus): recall@5 is 14% with the registered 4-bit seed
-    codebooks, and raising the code budget and/or TRAINING the
-    codebooks does not rescue it — 18% seed-256, 14% Lloyd-trained-16,
+    SERVING VERDICT (SCALE.md "PQ servability on clustered corpora", a
+    numpy replica of this pipeline on the clustered x100v corpus):
+    recall@5 is 14% with the registered 4-bit seed codebooks, and
+    raising the code budget and/or TRAINING the codebooks does not
+    rescue it — 18% seed-256, 14% Lloyd-trained-16,
     20% Lloyd-trained-256. The corpus's cluster margin (intra ≈ 0.69 vs
     inter ≈ 1.08 on unit vectors) sits BELOW the per-subspace
     quantization error at 8 subspaces, so PQ-as-sole-index is

@@ -638,12 +638,11 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold, keeping totality). The `size(toks) >= 3` row filter became a
     scan-local CASE (empty gram array) so tokenization is not
     re-inlined into a pushed filter — the r12 plan-audit trap class.
-    Measured (tools/probe_source_overlap_r12.py, interleaved min-of-3,
+    Measured (OPTIMIZATION_r12.md §5, interleaved min-of-3,
     results pinned equal): 0.88x sf0.1, 0.97x x10, 0.80x x100
     (13.4 → 9.9 s). The numpy-kernel alternative (same shingle hashes
     via functions/polyhash_np) measured 0.89x — the JVM linearized form
-    wins because no text crosses the Python boundary; kept in the
-    probe tool as the measured runner-up."""
+    wins because no text crosses the Python boundary."""
     from pyspark.sql import Window
 
     from duckdb_pst_spark.functions.partitioning import spread

@@ -38,7 +38,7 @@ _EN_STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "on", "for", "with")
 #: filter buys nothing here (explode of an empty array already emits no
 #: rows), so these specs exclude the rule per-query via QuerySpec.confs
 #: (the Q11/Q16 per-query-conf precedent). Measured interleaved
-#: min-of-3, results pinned equal (tools/ab_r12.py infer_gen):
+#: min-of-3, results pinned equal (OPTIMIZATION_r12.md §4):
 #: q_explode_agg 0.98x sf0.1 / 0.54x x100, q_oov_rate 0.93x / 0.67x,
 #: q_bpe_pairs 0.98x / 0.72x, q_phrase_pmi 0.91x / 0.89x. q_explode
 #: (the trap in the scan's DataFilters and a compound Filter) 0.88x at
@@ -835,7 +835,7 @@ def q_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     Everything after the scan is driver-trivial — the eval costs one
     pass at any corpus size.
 
-    r11 measured NO-SHIP (tools/ab_r11.py lang_confusion): the static
+    Measured NO-SHIP (OPTIMIZATION_r11.md "Measured no-ships"): the static
     plan shows TWO scan+classifier subtrees (one per consumer of the
     cell table), but AQE's runtime stage reuse already deduplicates the
     shared aggregate exchange — an eager localCheckpoint of the cell
@@ -964,18 +964,17 @@ def q_passage_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     countDistinct — and the survivors join is keyed the same way, so AQE
     can reuse/co-locate the exchange.
 
-    r11 optimization (guide §2.3, the docstring's own 100 TB note made
-    real): passages shuffle and join as a hash of the TOKEN SLICE — the
+    Passages shuffle and join as a hash of the TOKEN SLICE — the
     passage string is never materialized (tokens are space-free, so
     array_join is injective and array equality ⇔ string equality).
-    Interleaved min-of-3 (tools/ab_r11.py passage_dedup, results pinned
+    Interleaved min-of-3 (OPTIMIZATION_r11.md §5, results pinned
     equal): sf0.1 1.05 → 1.10 s (1.04x — inside the sub-second noise
     class; the slice hash costs what the string join cost), x100
     5.23 → 4.49 s (0.86x) — the ratio improves with scale because the
     deleted string bytes are the exchange's growth term, and they are
     network on a real cluster.
 
-    r12 hardening (VERDICT r11 item 1): a hash collision here silently
+    A hash collision here silently
     MERGES two distinct passages (undercounting kept_passages/
     kept_tokens) with no downstream exact check — not the re-verified
     candidate-generation class the band keys live in — so the key is
@@ -983,13 +982,13 @@ def q_passage_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes a constant discriminator first). Collision class drops from
     ~n²/2⁶⁵ (hundreds expected at the 100 TB target's ~1e11 passages)
     to n²/2¹²⁹ (~1e-17). Still 16 B vs the ~100 B passage string on
-    the exchange; cost measured ≤3% (tools/ab_r12.py pk128).
+    the exchange; cost measured ≤3% (OPTIMIZATION_r12.md §1).
 
-    r12 edge fix (ADVICE r11): empty slices are filtered out right
-    after the explode — for a zero-token doc Spark's ``sequence(0, -1)``
-    yields ``[0, -1]`` (two empty slices ⇒ two phantom passages) where
-    the oracle's ``range(0)`` yields none; dropping size-0 slices makes
-    both engines agree that a token-less document has no passages (no
+    Empty slices are filtered out right after the explode — for a
+    zero-token doc Spark's ``sequence(0, -1)`` yields ``[0, -1]`` (two
+    empty slices ⇒ two phantom passages) where the oracle's
+    ``range(0)`` yields none; dropping size-0 slices makes both engines
+    agree that a token-less document has no passages (no
     corpus in testdata hits the edge, so benched results are
     unchanged). The guard sits ON THE EXPLODED ATTRIBUTE, not on
     ``toks`` before the generate: a pre-explode ``size(toks) > 0``
@@ -1018,7 +1017,7 @@ def q_passage_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # min(doc_id) != max(doc_id), not COUNT(DISTINCT doc_id) —
     # min/max are plain partial aggregates (no distinct-expansion
     # machinery), measured 0.85x vs the r11 countDistinct shape at
-    # x100 (tools/ab_r12.py pk128), which more than pays for the
+    # x100 (OPTIMIZATION_r12.md §1), which more than pays for the
     # 128-bit key. The oracle keeps HAVING COUNT(DISTINCT ...) > 1;
     # the predicates are equivalent by definition.
     dup = (
@@ -1504,13 +1503,13 @@ def q_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.explode("toks").alias("w"))
         .filter(F.length("w") >= 2)
     )
-    # r11 optimization (guide §1.2 per-task work): pairs come straight
-    # off the word string as substring(w, i, 2) instead of splitting
-    # every word into a per-character array and concat-ing adjacent
-    # elements — one string slice per pair replaces a char-array
-    # allocation + filter + two array indexes + concat. Identical pairs
+    # Per-task work: pairs come straight off the word string as
+    # substring(w, i, 2) instead of splitting every word into a
+    # per-character array and concat-ing adjacent elements — one string
+    # slice per pair replaces a char-array allocation + filter + two
+    # array indexes + concat. Identical pairs
     # (Spark's substring and split('') both index codepoints; results
-    # pinned equal by tools/ab_r11.py bpe_pairs). Interleaved min-of-3:
+    # pinned equal, OPTIMIZATION_r11.md §2). Interleaved min-of-3:
     # sf0.1 1.51 -> 1.00 s (0.66x), x10 1.97 -> 1.63 s (0.83x).
     pairs = words.select(
         F.explode(
@@ -2905,18 +2904,17 @@ def q_quality_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     the model on xxhash64 and skips the string hash entirely."""
     from duckdb_pst_spark.functions.partitioning import spread
 
-    # r11 optimization (guide §3/§2.4): the "model" here is deterministic
-    # arithmetic over the bucket id — exactly what the DuckDB oracle
-    # computes inline — so the 4096-row broadcast dimension join is a
-    # pure-function lookup Catalyst cannot constant-fold away. Computing
-    # the weight inline deletes the BroadcastHashJoin (plan: scan →
-    # explode → hash → project → one doc-keyed aggregate; zero joins)
-    # for identical results (tools/ab_r11.py quality_linear, pinned
-    # equal). Interleaved min-of-3: sf0.1 1.45 → 0.99 s (0.68x), x10
-    # 1.95 → 1.60 s (0.82x). A deployment with a real exported model
-    # keeps the broadcast-join shape (the old form, preserved verbatim
-    # in the A/B tool); the broadcast-model join pattern stays exercised
-    # by q_oov_rate / q_lang_stopword / the pipeline gates.
+    # The "model" here is deterministic arithmetic over the bucket id —
+    # exactly what the DuckDB oracle computes inline — so the 4096-row
+    # broadcast dimension join is a pure-function lookup Catalyst cannot
+    # constant-fold away. Computing the weight inline deletes the
+    # BroadcastHashJoin (plan: scan → explode → hash → project → one
+    # doc-keyed aggregate; zero joins) for identical results
+    # (OPTIMIZATION_r11.md §3, pinned equal). Interleaved min-of-3:
+    # sf0.1 1.45 → 0.99 s (0.68x), x10 1.95 → 1.60 s (0.82x). A
+    # deployment with a real exported model keeps the broadcast-join
+    # shape; the broadcast-model join pattern stays exercised by
+    # q_oov_rate / q_lang_stopword / the pipeline gates.
     tok = (
         spread(table(spark, sf_dir, "documents"))
         .select("doc_id", F.explode(tokens(F.col("text"))).alias("t"))
@@ -3063,7 +3061,7 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiebreak for same-snapshot duplicates; with a crawl-date column
     the same plan keys min(ts).
 
-    r11 measured NO-SHIP (tools/ab_r11.py ngram_novelty): replacing the
+    Measured NO-SHIP (OPTIMIZATION_r11.md "Measured no-ships"): replacing the
     totals branch's explode + doc-keyed aggregate with a scan-local
     ``size(array_distinct(...))`` — the deleted exchange is map-side
     combined to doc cardinality already (the layout-admission rule's
@@ -3163,14 +3161,14 @@ def q_quality_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_token_histogram class), then a window cumsum and max over that
     tiny table. Nothing corpus-sized crosses an unpartitioned window.
 
-    r11 optimization (guide §5): the histogram feeds THREE consumers
+    One corpus pass: the histogram feeds THREE consumers
     (cumsum, totals, and the totals inside the D max) and Catalyst
     re-executed the corpus scan+aggregate per branch — the before plan
     holds three BatchScans of documents. One (lazy, since r12)
     localCheckpoint of the ≤|distinct lengths|-row histogram collapses
     that to ONE corpus pass; everything downstream is arithmetic on the
     tiny table.
-    Interleaved min-of-3 (tools/ab_r11.py quality_ks, results pinned
+    Interleaved min-of-3 (OPTIMIZATION_r11.md §6, results pinned
     equal): 0.87x at BOTH sf0.1 (0.75 → 0.65 s) and x100 (0.78 →
     0.68 s) — locally the row is job-overhead-bound because the scan
     reads only (lang, n_chars); on a real lake the 3→1 scan cut is the
@@ -3185,7 +3183,7 @@ def q_quality_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffle stages, so builder()+explain still fires the corpus-scan
     # map stage (2 jobs, vs eager's 3) — the build-time-job class is
     # reduced, not eliminated, and the snapshot-at-build semantics are
-    # unchanged. A/B (tools/ab_r12.py quality_ks_lazy, interleaved
+    # unchanged. A/B (OPTIMIZATION_r12.md §7, interleaved
     # min-of-3): 0.97x sf0.1, 0.93x x100 — the deleted eager pass is the
     # difference.
     d = table(spark, sf_dir, "documents").filter(F.col("lang").isin("en", "fr"))

@@ -104,9 +104,9 @@ _LIST_CONFS = frozenset({"spark.sql.optimizer.excludedRules"})
 def applied_confs(spark: SparkSession, spec: QuerySpec):
     """Context manager: set the spec's session-conf overrides, restore
     the previous values (or unset) on exit. The shipped mechanism for
-    per-query deployment knobs — bench.py wraps every run in it, so a
-    spec's measured cure (e.g. Q16/Q11's 64 MB broadcast threshold)
-    rides the artifact a user actually runs instead of a tools/ script.
+    per-query deployment knobs — bench.py and tools/ab.py wrap every
+    run in it, so a spec's measured cure (e.g. Q16/Q11's 64 MB broadcast
+    threshold) rides the artifact a user actually runs.
     List-valued confs (``_LIST_CONFS``) are merged into the session's
     value, so a session-excluded optimizer rule stays excluded."""
     from contextlib import contextmanager

@@ -93,8 +93,8 @@ def export_bucketed(
     sort) ``orders`` + ``lineitem`` on their shared join key so every
     subsequent orderkey equi-join / window / aggregate runs with ZERO
     fact-side exchange (the star joins' dominant cost — 60M rows /
-    1.07 GiB of shuffle at x100, measured in tools/exchange_budget.py;
-    the bucketed twins read 0.31-0.50x the plain plans, SCALE.md r8).
+    1.07 GiB of shuffle at x100; the bucketed twins read 0.31-0.50x the
+    plain plans; SCALE.md "Round 8: the TPC-H star-join exchange budget").
 
     This is the Spark form of the reference's partition-planning design
     point (/root/reference/src/table_function.cpp:191-212 — make the

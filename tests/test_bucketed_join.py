@@ -1,13 +1,13 @@
 """Bucketed-table co-location gate (sinks.save_bucketed_table).
 
-The round-8 TPC-H exchange-budget program (SCALE.md,
-tools/ab_bucketed_tpch.py) showed the star joins' dominant cost is the
-one fact-side orderkey exchange, and that bucketing orders+lineitem on
-orderkey deletes it (Q5 0.64x, Q10 0.56x, Q4 0.39x, Q12 0.37x at
-x100). This test pins the mechanism itself so the sink can't silently
-regress: a join between two tables bucketed the same way must read
-pre-bucketed scans with NO Exchange on either side, and return exactly
-the plain join's rows.
+The TPC-H exchange-budget program (SCALE.md, "Round 8: the TPC-H
+star-join exchange budget" and "Round 8 additions") showed the star
+joins' dominant cost is the one fact-side orderkey exchange, and that
+bucketing orders+lineitem on orderkey deletes it (Q5 0.64x, Q10 0.56x,
+Q4 0.39x, Q12 0.37x at x100). This test pins the mechanism itself so the
+sink can't silently regress: a join between two tables bucketed the same
+way must read pre-bucketed scans with NO Exchange on either side, and
+return exactly the plain join's rows.
 """
 
 from __future__ import annotations

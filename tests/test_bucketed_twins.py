@@ -138,7 +138,7 @@ def test_q11_twin_aggregate_is_exchange_free(spark, sf_dir):
     partial and final HashAggregate run bucket-local (the plain plan's
     one unavoidable exchange — its growth term, 3.0x wall over 100x
     data — is the thing this layout deletes; measured 0.50x at x10,
-    0.37x at x100, tools/ab_bucketed_registered.py)."""
+    0.37x at x100, SCALE.md "Q11 re-classed")."""
     plan = _executed_plan(bucketed.q11_value_view(spark, sf_dir))
     assert not _SHUFFLE.search(plan), plan
     assert plan.count("Bucketed: true") == 1, plan

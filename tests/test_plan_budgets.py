@@ -36,7 +36,7 @@ BUDGETS = {
                       # year) partial agg below the supplier attach) in
                       # exchange for deleting the FACT-sized suppkey
                       # exchange past the broadcast cliff — 0.66x at
-                      # x100 broadcast-off (tools/ab_r12.py suppagg_q8)
+                      # x100 broadcast-off (OPTIMIZATION_r12.md §3)
     "q_tpch_q9": 2,
     "q_tpch_q10": 2,
     "q_tpch_q11": 2,  # partkey agg + tiny threshold filter (twin: 0)
