@@ -1,23 +1,34 @@
-"""Vectorized portable poly-hash over word-3-gram shingles (numpy).
+"""The one numpy engine for the portable poly-hash of token spans.
 
-The engine-portable shingle hash is poly_hash("tok_i tok_{i+1} tok_{i+2}")
-with poly_hash = fold (acc·31 + codepoint) mod p (functions/portable.py —
-the same fold DuckDB oracles express with list_reduce). Evaluating that
-fold as a JVM higher-order lambda costs ~|shingle| interpreted steps per
-shingle; this module computes the identical values for EVERY shingle of a
-document batch in a handful of numpy passes via prefix hashes:
+Every MinHash, SimHash and winnowing oracle pins the hash of a span of
+``n`` consecutive whitespace tokens joined by single spaces:
+poly_hash = fold (acc·31 + codepoint) mod p (functions/portable.py; the
+DuckDB oracles write the same fold with list_reduce). ``SpanHasher``
+computes it for every span of a document batch in a few numpy passes.
+With loc(g) the position of character g within its own document and
 
-    Hpre[k] = Σ_{j<k} code[j]·31^(k-1-j)  (mod p)
-            = 31^(k-1) · Σ_{j<k} code[j]·inv31^j
-    H(a,b)  = Hpre[b] − Hpre[a]·31^(b−a)   — depends only on codes[a:b],
-              so per-doc substrings hash correctly even over the batch-
-              concatenated code array.
+    S[k] = Σ_{g<k} code[g]·31^-loc(g)   (mod p, summed over the batch)
 
-Exactness: codes < 2^21 (codepoints), p = 1e9+7, so every intermediate
-is bounded as annotated inline and stays inside int64. Shared by the
-winnowing kernel (operators/text.py) and the MinHash signature kernel
-(operators/dedup.py); hash equality with the interpreted JVM fold is
-pinned by the oracle-parity suite on every consumer.
+the span of characters [a, b) hashes to
+
+    H(a, b) = 31^(loc(b) − 1) · (S[b] − S[a])   (mod p)
+
+because every term then carries 31^(b−1−g), the fold's weight.
+
+Power tables: 31^k and 31^-k are indexed by position within a
+document, so they need only as many entries as the longest document,
+not the batch. A ``SpanHasher`` keeps them across the batches of a
+kernel call and doubles them when a longer document arrives.
+
+Consumers: ``n=3`` word shingles for the MinHash kernels
+(operators/dedup.py ``signatures_for``, ``_minhash_band_kernel``,
+``q_dedup_keep_best``) and winnowing (operators/text.py
+``q_winnowing``); ``n=1`` token hashes for ``_simhash_prod_kernel``.
+Each consumer's oracle-parity test pins the values.
+
+Exactness: codepoints < 2^21 < p = 1e9+7, so every product is < p²
+≈ 1e18 and the running sum is < L·p for L batch characters: int64 is
+exact up to L ≈ 9e9.
 """
 
 from __future__ import annotations
@@ -29,82 +40,81 @@ from duckdb_pst_spark.functions.portable import P_HASH
 _INV31 = pow(31, -1, P_HASH)
 
 
-def powmod_arange(base: int, n: int, p: int = P_HASH) -> np.ndarray:
-    """[base^0, base^1, …, base^(n-1)] mod p via vectorized binary
-    decomposition of the exponent (no Python loop over n)."""
-    out = np.ones(n, dtype=np.int64)
-    k = np.arange(n, dtype=np.int64)
-    b = base % p
-    bit = 0
-    while (1 << bit) < max(n, 2):
-        mask = (k >> bit) & 1 == 1
-        out[mask] = (out[mask] * b) % p
-        b = (b * b) % p
-        bit += 1
-    return out
+class SpanHasher:
+    """Poly-hashes of token spans, keeping its power tables across
+    calls: a kernel makes one and feeds it every batch."""
 
+    def __init__(self) -> None:
+        self.pw = np.ones(1, dtype=np.int64)  # 31^k mod p
+        self.ipw = np.ones(1, dtype=np.int64)  # 31^-k mod p
 
-def batch_shingle_hashes(
-    texts, doc_keys
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Word-3-gram poly-hashes for a batch of documents.
+    def _powers(self, n: int) -> tuple[np.ndarray, np.ndarray]:
+        """(31^k, 31^-k) mod p for at least k < n, doubling the kept
+        tables (each doubling is one vectorized multiply by the m-th
+        power)."""
+        while len(self.pw) < n:
+            m = len(self.pw)
+            self.pw = np.concatenate([self.pw, self.pw * pow(31, m, P_HASH) % P_HASH])
+            self.ipw = np.concatenate(
+                [self.ipw, self.ipw * pow(_INV31, m, P_HASH) % P_HASH]
+            )
+        return self.pw, self.ipw
 
-    ``texts``: iterable of raw text values (None allowed); ``doc_keys``:
-    matching per-doc identifiers. Documents with < 3 whitespace tokens
-    are dropped (no shingle — same rule as the JVM path and the DuckDB
-    oracles). Returns (kept_doc_keys, nsh, didx, pos, h):
-      kept_doc_keys — int64 doc identifier per KEPT doc
-      nsh           — shingle count per kept doc
-      didx          — kept-doc index (0-based) per shingle
-      pos           — 1-based shingle position within its doc
-      h             — poly-hash of the shingle string
-    Shingles appear grouped by doc in position order, so segment
-    reductions over ``nsh`` boundaries are valid.
-    """
-    p = P_HASH
-    kept, nsh_l, spans_a, spans_b = [], [], [], []
-    chunks: list[str] = []
-    off = 0
-    for key, text in zip(doc_keys, texts):
-        if text is None:
-            continue
-        toks = [t for t in text.split(" ") if t]
-        n = len(toks)
-        if n < 3:
-            continue
-        norm = " ".join(toks)
-        lens = np.fromiter((len(t) for t in toks), dtype=np.int64, count=n)
-        st = np.zeros(n, dtype=np.int64)
-        st[1:] = np.cumsum(lens[:-1] + 1)
-        ns = n - 2
-        spans_a.append(off + st[:ns])
-        spans_b.append(off + st[2:] + lens[2:])
-        kept.append(key)
-        nsh_l.append(ns)
-        chunks.append(norm)
-        off += len(norm)
-    if not kept:
-        z = np.zeros(0, dtype=np.int64)
-        return z, z, z, z, z
-    codes = np.frombuffer(
-        "".join(chunks).encode("utf-32-le"), dtype=np.uint32
-    ).astype(np.int64)
-    L = len(codes)
-    ipw = powmod_arange(_INV31, L + 1)
-    pw = powmod_arange(31, L + 1)
-    # code·ipw < 0x10FFFF·p ≈ 1.1e15 per product (codepoints < 2^21,
-    # exact under int64 multiply); reduced mod p before the cumsum, so
-    # the running sum is < L·p — exact to L ≈ 9e9 chars per batch
-    terms = (codes * ipw[:L]) % p
-    s_cum = np.zeros(L + 1, dtype=np.int64)
-    np.cumsum(terms, out=s_cum[1:])
-    s_cum %= p
-    hpre = np.zeros(L + 1, dtype=np.int64)
-    hpre[1:] = (pw[:L] * s_cum[1:]) % p  # p² ≈ 1e18 < 2^63 ✓
-    a = np.concatenate(spans_a)
-    b = np.concatenate(spans_b)
-    h = (hpre[b] - hpre[a] * pw[b - a]) % p
-    nsh = np.asarray(nsh_l, dtype=np.int64)
-    didx = np.repeat(np.arange(len(kept), dtype=np.int64), nsh)
-    pos = np.concatenate([np.arange(1, ns + 1, dtype=np.int64) for ns in nsh_l])
-    return np.asarray(kept, dtype=np.int64), nsh, didx, pos, h
+    def spans(
+        self, texts, doc_keys, n: int = 3
+    ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+        """Poly-hashes of every span of ``n`` consecutive tokens in a batch.
+
+        ``texts``: raw text values (None allowed); ``doc_keys``: matching
+        per-doc identifiers. Tokens are ``split(" ")`` with empties
+        dropped; NULL documents and documents with fewer than ``n`` tokens
+        are dropped (no span, as in the JVM path and the DuckDB oracles).
+        Returns (kept, nsp, didx, pos, h):
+          kept — int64 doc key per kept doc
+          nsp  — span count per kept doc (≥ 1)
+          didx — kept-doc index (0-based) per span
+          pos  — 1-based span position within its doc
+          h    — poly-hash of the span text
+        Spans are grouped by doc in position order, so segment reductions
+        at the exclusive cumsum of ``nsp`` are valid.
+        """
+        p = P_HASH
+        kept, ntok, lens, docs = [], [], [], []
+        for key, text in zip(doc_keys, texts):
+            if text is None:
+                continue
+            toks = [t for t in text.split(" ") if t]
+            if len(toks) < n:
+                continue
+            kept.append(key)
+            ntok.append(len(toks))
+            lens.extend(map(len, toks))
+            docs.append(" ".join(toks))
+        if not kept:
+            z = np.zeros(0, dtype=np.int64)
+            return z, z, z, z, z
+        # the batch text is every doc followed by one space, so each token
+        # starts one past the previous token's end, across doc boundaries
+        codes = np.frombuffer(
+            (" ".join(docs) + " ").encode("utf-32-le"), dtype=np.uint32
+        ).astype(np.int64)
+        lens = np.asarray(lens, dtype=np.int64)
+        ntok = np.asarray(ntok, dtype=np.int64)
+        tstart = np.zeros(len(lens), dtype=np.int64)
+        np.cumsum(lens[:-1] + 1, out=tstart[1:])
+        dtok = np.zeros(len(kept), dtype=np.int64)  # first token of each doc
+        np.cumsum(ntok[:-1], out=dtok[1:])
+        dstart = tstart[dtok]
+        dlen = np.diff(np.r_[dstart, len(codes)])
+        pw, ipw = self._powers(int(dlen.max()))
+        loc = np.arange(len(codes), dtype=np.int64) - np.repeat(dstart, dlen)
+        s = np.zeros(len(codes) + 1, dtype=np.int64)
+        np.cumsum(codes * ipw[loc] % p, out=s[1:])
+        nsp = ntok - (n - 1)
+        didx = np.repeat(np.arange(len(kept), dtype=np.int64), nsp)
+        pos = np.arange(len(didx), dtype=np.int64) - np.repeat(np.cumsum(nsp) - nsp, nsp)
+        first = dtok[didx] + pos
+        a = tstart[first]
+        b = tstart[first + (n - 1)] + lens[first + (n - 1)]
+        h = (s[b] - s[a]) % p * pw[b - dstart[didx] - 1] % p
+        return np.asarray(kept, dtype=np.int64), nsp, didx, pos + 1, h

@@ -13,8 +13,9 @@ Scale design:
 
 Parity design: oracle-checked variants use the portable polynomial hash
 (functions/portable.py) so DuckDB computes identical signatures — this
-includes the Arrow/numpy kernel (``q_dedup_minhash_vec``), which
-vectorizes the SAME polynomial hash via a modular prefix scan and is
+includes the Arrow/numpy kernels (``q_dedup_minhash_vec`` and every
+``signatures_for`` consumer), which compute the SAME polynomial hash
+with the one numpy engine in functions/polyhash_np.py and are
 therefore hash-verified end to end. Only ``q_dedup_minhash_fast``
 (constant-pinned oracle) swaps in ``xxhash64`` — the JVM-native hot path;
 plan shape is identical to the verified twins.
@@ -148,15 +149,30 @@ def _duck_shingle_hashes() -> str:
     return f"list_distinct(list_transform(range(1, len(toks) - 1), i -> {sh}))"
 
 
+def _duck_sig_cols() -> str:
+    """DuckDB select list sig_0..sig_{K-1} over the `sh` hash list."""
+    return ",\n           ".join(
+        f"list_min(list_transform(sh, h -> ({_A[k]} * h + {_B[k]}) % {P_HASH})) AS sig_{k}"
+        for k in range(MINHASH_K)
+    )
+
+
+def _duck_bands() -> str:
+    """DuckDB body of the `bands` CTE: one (doc_id, band_idx, band_val)
+    row per band of every `sig` row, band_val = (sig_2j·31 + sig_2j+1)
+    mod p — the oracle twin of ``_band_cols``."""
+    return " UNION ALL ".join(
+        f"SELECT doc_id, {j} AS band_idx, (sig_{2 * j} * 31 + sig_{2 * j + 1}) % {P_HASH} AS band_val FROM sig"
+        for j in range(MINHASH_BANDS)
+    )
+
+
 def _duck_minhash_cte(where: str = "") -> str:
     """Shared CTE prefix: documents → toks → distinct shingle hashes → sigs.
 
     ``where`` optionally restricts the document set (e.g. the bounded
     QA sample in q_lsh_recall)."""
-    sigs = ",\n           ".join(
-        f"list_min(list_transform(sh, h -> ({_A[k]} * h + {_B[k]}) % {P_HASH})) AS sig_{k}"
-        for k in range(MINHASH_K)
-    )
+    sigs = _duck_sig_cols()
     return f"""
     WITH tk AS (
       SELECT doc_id, {duck_tokens('text')} AS toks FROM documents {where}
@@ -172,6 +188,20 @@ def _duck_minhash_cte(where: str = "") -> str:
     )"""
 
 
+def _minhash_sigs(h, nsp):
+    """The MinHash signature step: span hashes ``h``, grouped in
+    segments of ``nsp`` (≥ 1) per document, → a (K, docs) int64 array of
+    sig_k = min over the segment of (a_k·h + b_k) mod p. Each product
+    is < p² ≈ 1e18, exact in int64; one segment minimum per k keeps
+    the working set at one span-length array."""
+    import numpy as np
+
+    starts = np.cumsum(nsp) - nsp
+    return np.stack(
+        [np.minimum.reduceat((a * h + b) % P_HASH, starts) for a, b in zip(_A, _B)]
+    )
+
+
 def signatures_for(docs: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
     """(doc_id, text) → (doc_id, sh: array<bigint>, sig_0..sig_{K-1}).
 
@@ -183,11 +213,11 @@ def signatures_for(docs: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
     can partition the signature set with a map-side filter instead of a
     join back to the tagging table.
 
-    Round 6 moved the shingle/signature math into the scan-local numpy
-    poly-hash kernel (functions/polyhash_np.py): the former JVM path —
-    an interpreted per-character fold per shingle behind two
-    localCheckpoint barriers — was the dominant cost of every consumer
-    (q_dedup_keep_best's private migration measured 36.4 → 7.3 s at
+    The shingle/signature math is a scan-local numpy kernel over the
+    shared poly-hash engine (functions/polyhash_np.py) and
+    ``_minhash_sigs``: the JVM path — an interpreted per-character fold
+    per shingle behind two localCheckpoint barriers — was the dominant
+    cost of every consumer (q_dedup_keep_best measured 36.4 → 7.3 s at
     Zipf-100×). The kernel emits the IDENTICAL values: per-doc DISTINCT
     shingle poly-hashes (sh) and min((a_k·h + b_k) mod p) signatures,
     hash-pinned by every consumer's oracle-parity test."""
@@ -207,12 +237,13 @@ def signatures_for(docs: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
         import numpy as np
 
         from duckdb_pst_spark.functions.batches import rebatch
-        from duckdb_pst_spark.functions.polyhash_np import batch_shingle_hashes
+        from duckdb_pst_spark.functions.polyhash_np import SpanHasher
 
+        hasher = SpanHasher()
         for pdf in rebatch(batches, 4096):
             # keys = row positions so carry columns align without
             # assuming doc_id uniqueness
-            rows, _nsh, didx, _pos, h = batch_shingle_hashes(
+            rows, _nsh, didx, _pos, h = hasher.spans(
                 pdf["text"].values, np.arange(len(pdf), dtype=np.int64)
             )
             cols: dict = {}
@@ -228,7 +259,6 @@ def signatures_for(docs: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
                 first = np.r_[True, (dd[1:] != dd[:-1]) | (hh[1:] != hh[:-1])]
                 dd, hh = dd[first], hh[first]
                 counts = np.bincount(dd, minlength=len(rows))
-                starts = np.r_[0, np.cumsum(counts)[:-1]]
                 cols["doc_id"] = pd.Series(
                     pdf["doc_id"].values[rows].tolist(), dtype="int64"
                 )
@@ -238,12 +268,8 @@ def signatures_for(docs: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
                     [a.tolist() for a in np.split(hh, np.cumsum(counts)[:-1])],
                     dtype="object",
                 )
-                for k in range(MINHASH_K):
-                    # (a·h + b) mod p < p² ≈ 1e18: int64-exact
-                    t = (_A[k] * hh + _B[k]) % P_HASH
-                    cols[f"sig_{k}"] = pd.Series(
-                        np.minimum.reduceat(t, starts).tolist(), dtype="int64"
-                    )
+                for k, sig in enumerate(_minhash_sigs(hh, counts)):
+                    cols[f"sig_{k}"] = pd.Series(sig, dtype="int64")
             else:
                 # empty slices keep each column's dtype for Arrow
                 cols["doc_id"] = pdf["doc_id"].iloc[0:0]
@@ -288,6 +314,7 @@ def q_minhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _band_cols() -> list[Column]:
+    """Band keys band_j = (sig_2j·31 + sig_2j+1) mod p, one column each."""
     return [
         ((F.col(f"sig_{2 * j}") * 31 + F.col(f"sig_{2 * j + 1}")) % F.lit(P_HASH)).alias(
             f"band_{j}"
@@ -296,15 +323,21 @@ def _band_cols() -> list[Column]:
     ]
 
 
+def _band_rows(sigs: DataFrame, *keep: str) -> DataFrame:
+    """(…, sig_*) → (*keep, band_idx int, band_val long), one row per
+    band. The bands leave each row as one exploded array, so the
+    signature plan runs once (a per-band UNION would re-run it)."""
+    return sigs.select(
+        *keep, F.posexplode(F.array(*_band_cols())).alias("band_idx", "band_val")
+    )
+
+
 @query(
     "q_dedup_minhash",
     oracle=_duck_minhash_cte()
     + f"""
     , bands AS (
-      {' UNION ALL '.join(
-        f"SELECT doc_id, {j} AS band_idx, (sig_{2 * j} * 31 + sig_{2 * j + 1}) % {P_HASH} AS band_val FROM sig"
-        for j in range(MINHASH_BANDS)
-      )}
+      {_duck_bands()}
     ),
     pairs AS (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -339,22 +372,7 @@ def verified_pairs_from_sigs(
     representatives BEFORE the quadratic-in-bucket-size pair stage
     (identical text ⇒ identical signatures ⇒ identical buckets, so the
     rep-level pair graph expands exactly to the doc-level one)."""
-    bands = sigs.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("band_idx"),
-                        ((F.col(f"sig_{2 * j}") * 31 + F.col(f"sig_{2 * j + 1}")) % F.lit(P_HASH)).alias(
-                            "band_val"
-                        ),
-                    )
-                    for j in range(MINHASH_BANDS)
-                ]
-            )
-        ).alias("b"),
-    ).select("doc_id", F.col("b.band_idx").alias("band_idx"), F.col("b.band_val").alias("band_val"))
+    bands = _band_rows(sigs, "doc_id")
     a = bands.alias("a")
     b = bands.alias("b")
     pairs = (
@@ -524,14 +542,10 @@ def _duck_verified_pairs_cte(*, recursive: bool = False) -> str:
     CTE, asserting the prefix is present so any drift in
     ``_duck_minhash_cte`` fails loudly at import instead of producing
     invalid SQL at verify time."""
-    bands_union = " UNION ALL ".join(
-        f"SELECT doc_id, {j} AS band_idx, (sig_{2 * j} * 31 + sig_{2 * j + 1}) % {P_HASH} AS band_val FROM sig"
-        for j in range(MINHASH_BANDS)
-    )
     sql = (
         _duck_minhash_cte()
         + f"""
-    , bands AS ({bands_union}),
+    , bands AS ({_duck_bands()}),
     cand AS (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM bands a JOIN bands b
@@ -961,122 +975,43 @@ def _band_pairs(bands: DataFrame) -> DataFrame:
     )
 
 
-def _powers_factory(P: int):
-    """Modular power tables for base 31 mod P, grown geometrically (the
-    sequential recurrence is a one-time Python loop per growth, then
-    shared by every doc). Returns ``powers(n) -> (31^k array, 31^-k
-    array)`` covering exponents 0..n. Shared by the minhash and simhash
-    kernels."""
-    import numpy as np
-
-    inv31 = pow(31, P - 2, P)  # Fermat inverse — P is prime
-    tbl: dict[str, list] = {"p": [1], "ip": [1]}
-
-    def powers(n: int):
-        p, ip = tbl["p"], tbl["ip"]
-        if len(p) <= n:
-            target = max(n + 1, 2 * len(p))  # grow geometrically
-            while len(p) < target:
-                p.append(p[-1] * 31 % P)
-                ip.append(ip[-1] * inv31 % P)
-            tbl["pa"] = np.array(p, dtype=np.int64)
-            tbl["ia"] = np.array(ip, dtype=np.int64)
-        return tbl["pa"], tbl["ia"]
-
-    return powers
-
-
-def _token_prefix_scan(text, powers, P):
-    """Modular prefix scan of a document's space-joined token stream:
-    the char fold h = fold((acc*31 + code) % P) composes over
-    concatenation — h(s‖t) = (h(s)·31^len(t) + h(t)) mod P — so with P
-    prime the whole document is hashed ONCE
-    (F_k = 31^k · Σ code_j·31^{-j} mod P, all numpy) and ANY
-    token-aligned segment hash is then a difference
-    (F_b − F_a·31^{b−a}) mod P extracted by fancy indexing. Returns
-    (Fp, p31, off, tl) — prefix array, power table, per-token offsets
-    and lengths — or None for NULL/token-free text (the JVM twins emit
-    zero rows there). int64 never overflows: values < P ≈ 1e9, so
-    products < 1e18 and the prefix sum over a ≤1e6-char doc stays
-    < 1e15. Shared by `_minhash_band_kernel` (3-token shingle spans)
-    and `_simhash_prod_kernel` (single-token spans)."""
-    import numpy as np
-
-    if text is None:
-        return None
-    toks = [t for t in text.split(" ") if t]
-    nt = len(toks)
-    if nt == 0:
-        return None
-    joined = " ".join(toks)
-    L = len(joined)
-    p31, ip31 = powers(L)
-    try:
-        buf = np.frombuffer(joined.encode("ascii"), np.uint8).astype(np.int64)
-    except UnicodeEncodeError:
-        # non-ASCII: match the engines' per-character code points
-        buf = np.fromiter(map(ord, joined), np.int64, count=L)
-    g = buf % P * ip31[1 : L + 1] % P
-    G = np.cumsum(g)  # < L·P — safe in int64 for docs to ~9e9 chars/P
-    Fp = np.empty(L + 1, dtype=np.int64)
-    Fp[0] = 0
-    Fp[1:] = p31[1 : L + 1] * (G % P) % P
-    tl = np.fromiter(map(len, toks), np.int64, count=nt)
-    off = np.empty(nt, dtype=np.int64)
-    off[0] = 0
-    np.cumsum(tl[:-1] + 1, out=off[1:])
-    return Fp, p31, off, tl
-
-
 def _minhash_band_kernel(batches):
-    """Arrow-batched minhash kernel: (doc_id, text) → band keys, computing
-    the SAME portable polynomial shingle hashes as the JVM/oracle twins —
-    so this path is hash-verified against DuckDB, not rows-only. The
-    modular prefix-scan machinery lives in `_token_prefix_scan`; every
-    word-3-gram shingle hash is a segment difference off it, and the K
-    permutation minima are one matrix op — no per-shingle Python loop."""
+    """Arrow-batched MinHash band keys: (doc_id, text) → one (doc_id,
+    band_idx, band_val) row per band of every document with a word-3-gram
+    shingle. Batch-wide numpy, no per-document loop past tokenization:
+    shingle hashes from the shared engine (functions/polyhash_np
+    ``SpanHasher``), signatures as segment minima (``_minhash_sigs``),
+    band_val = (sig_2j·31 + sig_2j+1) mod p. The values are the
+    portable ones the JVM and DuckDB twins compute, so the path is
+    hash-verified against its oracle, not rows-only."""
     import numpy as np
     import pandas as pd
 
-    P = P_HASH
-    A = np.array(_A, dtype=np.int64)[:, None]
-    B = np.array(_B, dtype=np.int64)[:, None]
-    powers = _powers_factory(P)
+    from duckdb_pst_spark.functions.batches import rebatch
+    from duckdb_pst_spark.functions.polyhash_np import SpanHasher
 
+    hasher = SpanHasher()
     # The session Arrow cap is payload-safe-small (256); coalesce chunks
     # so per-batch fixed costs amortize over ~8k narrow rows (see
     # functions/batches.py for why the conf itself must not be raised).
-    from duckdb_pst_spark.functions.batches import rebatch
-
     for pdf in rebatch(batches, 8192):
-        od, oi, ov = [], [], []
-        for doc_id, text in zip(pdf["doc_id"].values, pdf["text"].values):
-            pre = _token_prefix_scan(text, powers, P)
-            if pre is None:
-                continue
-            Fp, p31, off, tl = pre
-            nt = len(tl)
-            if nt < 3:
-                continue
-            a = off[: nt - 2]
-            b = off[2:] + tl[2:]
-            sh = np.unique((Fp[b] - Fp[a] * p31[b - a]) % P)
-            sigs = ((A * sh + B) % P).min(axis=1)
-            for j in range(MINHASH_BANDS):
-                od.append(doc_id)
-                oi.append(j)
-                ov.append(int((sigs[2 * j] * 31 + sigs[2 * j + 1]) % P))
-        yield pd.DataFrame({"doc_id": od, "band_idx": oi, "band_val": ov})
+        ids, nsh, _didx, _pos, h = hasher.spans(pdf["text"].values, pdf["doc_id"].values)
+        sig = _minhash_sigs(h, nsh)
+        bands = (sig[0::2] * 31 + sig[1::2]) % P_HASH  # (bands, docs)
+        yield pd.DataFrame(
+            {
+                "doc_id": np.repeat(ids, MINHASH_BANDS),
+                "band_idx": np.tile(np.arange(MINHASH_BANDS, dtype=np.int32), len(ids)),
+                "band_val": bands.T.ravel(),
+            }
+        )
 
 
 _VEC_ORACLE = (
     _duck_minhash_cte()
     + f"""
     , bands AS (
-      {' UNION ALL '.join(
-        f"SELECT doc_id, {j} AS band_idx, (sig_{2 * j} * 31 + sig_{2 * j + 1}) % {P_HASH} AS band_val FROM sig"
-        for j in range(MINHASH_BANDS)
-      )}
+      {_duck_bands()}
     ),
     kept AS (
       SELECT band_idx, band_val FROM bands
@@ -1102,8 +1037,8 @@ def q_dedup_minhash_vec(spark: SparkSession, sf_dir: str) -> DataFrame:
     — they sit outside whole-stage codegen and allocate per element — so
     a compute-bound shingle+minhash stage pays ~200µs/doc in the JVM
     form. The Arrow kernel amortizes the Python boundary over whole
-    columnar batches and vectorizes the signature math in numpy (the
-    modular prefix scan documented on ``_minhash_band_kernel``). Both
+    columnar batches and vectorizes the signature math in numpy
+    (``_minhash_band_kernel`` over the shared poly-hash engine). Both
     scale the same way — per-row map stage, one groupBy shuffle — the
     kernel just trades JVM expression interpretation for Arrow transfer
     + numpy. Downstream pair generation is shared (``_band_pairs``).
@@ -1153,11 +1088,12 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     highest-quality member, not an arbitrary one (q_dedup_exact's MIN
     keeps the first; this keeps the best).
 
-    Scale design: signatures come from the scan-local numpy poly-hash
-    kernel (functions/polyhash_np.py — same prefix-hash machinery as
-    q_winnowing; the interpreted JVM per-character fold was this plan's
-    dominant cost, and n_chars rides the same source row so the old
-    doc_id join-back is gone too); the group-and-pick is ONE shuffle on
+    Scale design: signatures come from a scan-local numpy kernel (the
+    poly-hash engine in functions/polyhash_np.py, which q_winnowing
+    also uses, and ``_minhash_sigs``; the interpreted JVM
+    per-character fold was this plan's dominant cost, and n_chars
+    rides the same source row so the old doc_id join-back is gone
+    too); the group-and-pick is ONE shuffle on
     the 8-int signature key with a window rank — no pairwise
     comparisons at all, so cost is O(corpus), not O(candidates²). The
     window partition is a near-dup bucket (tiny by construction), so no
@@ -1172,33 +1108,20 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
 
         from duckdb_pst_spark.functions.batches import rebatch
-        from duckdb_pst_spark.functions.polyhash_np import batch_shingle_hashes
-        from duckdb_pst_spark.functions.portable import P_HASH
+        from duckdb_pst_spark.functions.polyhash_np import SpanHasher
 
+        hasher = SpanHasher()
         for pdf in rebatch(batches, 4096):
-            ids, nsh, _didx, _pos, h = batch_shingle_hashes(
-                pdf["text"].values, pdf["doc_id"].values
+            # keys = row positions, so n_chars rides along by index
+            rows, nsh, _didx, _pos, h = hasher.spans(
+                pdf["text"].values, np.arange(len(pdf), dtype=np.int64)
             )
-            cols = {"doc_id": pd.Series(ids.tolist(), dtype="int64")}
-            if len(ids):
-                # n_chars of the kept docs, aligned via doc_id lookup on
-                # this batch (kernel input order == batch order)
-                nc = dict(zip(pdf["doc_id"].values, pdf["n_chars"].values))
-                cols["n_chars"] = pd.Series(
-                    [int(nc[i]) for i in ids.tolist()], dtype="int64"
-                )
-                starts = np.r_[0, np.cumsum(nsh)[:-1]]
-                for k in range(MINHASH_K):
-                    # (a·h + b) mod p per shingle (< p² ≈ 1e18, int64-
-                    # exact), then a per-doc segment minimum
-                    t = (_A[k] * h + _B[k]) % P_HASH
-                    cols[f"sig_{k}"] = pd.Series(
-                        np.minimum.reduceat(t, starts).tolist(), dtype="int64"
-                    )
-            else:
-                cols["n_chars"] = pd.Series(dtype="int64")
-                for k in range(MINHASH_K):
-                    cols[f"sig_{k}"] = pd.Series(dtype="int64")
+            cols = {
+                "doc_id": pd.Series(pdf["doc_id"].values[rows], dtype="int64"),
+                "n_chars": pd.Series(pdf["n_chars"].values[rows], dtype="int64"),
+            }
+            for k, sig in enumerate(_minhash_sigs(h, nsh)):
+                cols[f"sig_{k}"] = pd.Series(sig, dtype="int64")
             yield pd.DataFrame(cols)
 
     from duckdb_pst_spark.functions.partitioning import spread
@@ -1243,15 +1166,7 @@ def _duck_incr_oracle() -> str:
     shingles/sigs for REPRESENTATIVES ONLY -> batch-vs-corpus bands."""
     from duckdb_pst_spark.functions.portable import duck_tokens as _dt
 
-    sigs = ",\n           ".join(
-        f"list_min(list_transform(sh, h -> ({_A[k]} * h + {_B[k]}) % {P_HASH})) AS sig_{k}"
-        for k in range(MINHASH_K)
-    )
-    bands_union = " UNION ALL ".join(
-        f"SELECT doc_id, {j} AS band_idx,"
-        f" (sig_{2 * j} * 31 + sig_{2 * j + 1}) % {P_HASH} AS band_val FROM sig"
-        for j in range(MINHASH_BANDS)
-    )
+    sigs = _duck_sig_cols()
     return f"""
     WITH role AS (
       SELECT doc_id, text,
@@ -1281,7 +1196,7 @@ def _duck_incr_oracle() -> str:
       FROM sh
     ),
     bands AS (
-      {bands_union}
+      {_duck_bands()}
     ),
     cand AS (
       SELECT DISTINCT b.doc_id AS bid, c.doc_id AS cid
@@ -1378,10 +1293,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     sigs = signatures_for(sig_in, carry=("is_c",))
-    bands = sigs.select(
-        "doc_id", "is_c",
-        F.posexplode(F.array(*_band_cols())).alias("band_idx", "band_val"),
-    )
+    bands = _band_rows(sigs, "doc_id", "is_c")
     b_bands = bands.where(~F.col("is_c")).select(
         F.col("doc_id").alias("bid"), "band_idx", "band_val"
     )
@@ -1455,11 +1367,7 @@ def _duck_band_cand_cte() -> str:
     production band join, shared shape with q_dedup_minhash."""
     return f"""
     , bands AS (
-      {' UNION ALL '.join(
-        f"SELECT doc_id, {j} AS band_idx,"
-        f" (sig_{2 * j} * 31 + sig_{2 * j + 1}) % {P_HASH} AS band_val FROM sig"
-        for j in range(MINHASH_BANDS)
-      )}
+      {_duck_bands()}
     ),
     cand AS (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -1518,27 +1426,7 @@ def q_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sigs = signatures_for(docs)
     # candidate pairs: the production band join on the sample signatures
-    bdf = sigs.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("band_idx"),
-                        (
-                            (F.col(f"sig_{2 * j}") * 31 + F.col(f"sig_{2 * j + 1}"))
-                            % F.lit(P_HASH)
-                        ).alias("band_val"),
-                    )
-                    for j in range(MINHASH_BANDS)
-                ]
-            )
-        ).alias("b"),
-    ).select(
-        "doc_id",
-        F.col("b.band_idx").alias("band_idx"),
-        F.col("b.band_val").alias("band_val"),
-    )
+    bdf = _band_rows(sigs, "doc_id")
     cand = (
         bdf.alias("a")
         .join(
@@ -1846,42 +1734,35 @@ _SHPROD_CAP = 64
 
 def _simhash_prod_kernel(batches):
     """Arrow-batched 60-bit SimHash kernel: (doc_id, text) → (doc_id, s),
-    computing the SAME portable token hashes as the JVM form — h1 =
-    poly(token) via the shared `_token_prefix_scan` segment extraction
-    (token spans instead of the minhash kernel's 3-gram spans), h2 =
-    Knuth remix — so the output stays fully oracle-checked. NULL/empty
-    text yields no row, like the JVM explode. The 60
-    per-bit ±1 vote sums are one (tokens × 60) sign-matrix reduction in
-    numpy per document instead of 60 interpreted conditional folds per
-    token (measured: the JVM explode/fold form spent ~35 s at 100×
-    hashing characters through interpreted expressions)."""
+    from the SAME portable token hashes as the JVM form — h1 =
+    poly(token), the shared engine's one-token spans
+    (functions/polyhash_np ``SpanHasher``, ``n=1``), h2 = Knuth remix
+    of h1 — so the output stays fully oracle-checked. NULL or token-free
+    text yields no row, like the JVM explode. Bit i of s is set when
+    more of the document's tokens have bit i set than clear (bits 0–29
+    from h1, 30–59 from h2): one ``np.add.reduceat`` per bit over the
+    batch's tokens. One reduceat over a (tokens × 60) bit matrix
+    measured slower (vote step on 50,000 documents, 8,192-row batches:
+    0.30 per bit vs 2.0 CPU-s for the matrix)."""
     import numpy as np
     import pandas as pd
 
-    P = P_HASH
-    MULT = 2654435761 % P
-    powers = _powers_factory(P)
-    shifts = np.arange(30, dtype=np.int64)
     from duckdb_pst_spark.functions.batches import rebatch
+    from duckdb_pst_spark.functions.polyhash_np import SpanHasher
 
+    mult = 2654435761 % P_HASH
+    hasher = SpanHasher()
     for pdf in rebatch(batches, 8192):
-        od, os_ = [], []
-        for doc_id, text in zip(pdf["doc_id"].values, pdf["text"].values):
-            pre = _token_prefix_scan(text, powers, P)
-            if pre is None:
-                continue
-            Fp, p31, off, tl = pre
-            h1 = (Fp[off + tl] - Fp[off] * p31[tl]) % P
-            h2 = h1 * MULT % P
-            votes = np.concatenate(
-                [
-                    (2 * ((h1[:, None] >> shifts) & 1) - 1).sum(axis=0),
-                    (2 * ((h2[:, None] >> shifts) & 1) - 1).sum(axis=0),
-                ]
-            )
-            os_.append(int(((votes > 0).astype(np.int64) << np.arange(60)).sum()))
-            od.append(doc_id)
-        yield pd.DataFrame({"doc_id": od, "s": os_})
+        ids, ntok, _didx, _pos, h1 = hasher.spans(
+            pdf["text"].values, pdf["doc_id"].values, n=1
+        )
+        starts = np.cumsum(ntok) - ntok
+        h2 = h1 * mult % P_HASH
+        s = np.zeros(len(ids), dtype=np.int64)
+        for bit in range(_SHPROD_BITS):
+            ones = np.add.reduceat((h1 if bit < 30 else h2) >> (bit % 30) & 1, starts)
+            s |= (2 * ones > ntok).astype(np.int64) << bit
+        yield pd.DataFrame({"doc_id": ids, "s": s})
 
 
 def _simhash_prod_oracle() -> str:
@@ -1955,8 +1836,8 @@ def q_dedup_simhash_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
     vote bits (bit 29 of each carries slight bias since P < 2^30 —
     irrelevant for near-dup banding, noted for honesty). The signature
     stage is the `_simhash_prod_kernel` Arrow kernel — the portable
-    hashes computed in numpy via the same modular prefix scan the
-    minhash kernel uses, one sign-matrix reduction per doc instead of
+    hashes computed in numpy by the poly-hash engine the minhash
+    kernels use, one segment sum per bit over the batch instead of
     60 interpreted conditional folds per token (same-session at 100×:
     45.3 s JVM-fold form → 9.2 s cold / 6.1 s warm-min). Fingerprints
     are scan-local (one row out per doc) and checkpointed so the two
@@ -2283,11 +2164,7 @@ _SWEEP_TAUS = tuple(range(200_000, 800_001, 100_000))  # 0.2 .. 0.8
     oracle=_duck_minhash_cte()
     + f"""
     , bands AS (
-      {' UNION ALL '.join(
-        f"SELECT doc_id, {j} AS band_idx,"
-        f" (sig_{2 * j} * 31 + sig_{2 * j + 1}) % {P_HASH} AS band_val FROM sig"
-        for j in range(MINHASH_BANDS)
-      )}
+      {_duck_bands()}
     ),
     pairs AS (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -2461,10 +2338,7 @@ def q_dedup_prefix_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=_duck_minhash_cte()
     + f"""
     , bands AS (
-      {' UNION ALL '.join(
-        f"SELECT doc_id, {j} AS band_idx, (sig_{2 * j} * 31 + sig_{2 * j + 1}) % {P_HASH} AS band_val FROM sig"
-        for j in range(MINHASH_BANDS)
-      )}
+      {_duck_bands()}
     ),
     bk AS (
       SELECT band_idx, band_val, CAST(count(*) AS BIGINT) AS sz
@@ -2491,8 +2365,8 @@ def q_minhash_band_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fraction of the corpus that generates any candidate at all.
 
     Scale shape: signatures from the shared scan-local kernel — read
-    ONCE: the four band keys leave each row as one exploded
-    (band_idx, band_val) struct array, so the plan holds a single
+    ONCE: the four band keys leave each row as one posexploded array
+    (``_band_rows``), so the plan holds a single
     MapInPandas stage (a 4-way UNION of per-band selects would
     re-run the signature kernel per band — caught at registration and
     plan-gated); then one (band, value)-keyed map-side-combined
@@ -2500,20 +2374,8 @@ def q_minhash_band_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     table prices exactly what will run) and a ≤4-group rollup. No pair
     is ever materialized — C(sz, 2) is arithmetic on bucket sizes."""
     sig = minhash_signatures(spark, sf_dir)
-    band_arr = F.array(
-        *[
-            F.struct(
-                F.lit(j).cast("long").alias("band_idx"),
-                (
-                    (F.col(f"sig_{2 * j}") * 31 + F.col(f"sig_{2 * j + 1}"))
-                    % F.lit(P_HASH)
-                ).alias("band_val"),
-            )
-            for j in range(MINHASH_BANDS)
-        ]
-    )
-    bands = sig.select(F.explode(band_arr).alias("b")).select(
-        "b.band_idx", "b.band_val"
+    bands = _band_rows(sig).select(
+        F.col("band_idx").cast("long").alias("band_idx"), "band_val"
     )
     bk = bands.groupBy("band_idx", "band_val").agg(
         F.count(F.lit(1)).cast("long").alias("sz")

@@ -32,11 +32,11 @@ from duckdb_pst_spark.functions.portable import poly_hash, tokens
 from duckdb_pst_spark.operators.dedup import (
     JACCARD_THRESHOLD_U,
     _band_pairs,
+    _duck_bands,
     _duck_minhash_cte,
     _minhash_band_kernel,
     _shingle_hashes,
 )
-from duckdb_pst_spark.operators.dedup import MINHASH_BANDS, P_HASH
 from duckdb_pst_spark.operators.text import _EN_STOPWORDS
 from duckdb_pst_spark.registry import query
 from duckdb_pst_spark.tables import table
@@ -52,14 +52,10 @@ def _pipeline_oracle() -> str:
         "i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))) AS g"
     )
     # capped-bucket candidate pairs + Jaccard verify, spliced into our WITH
-    bands_union = " UNION ALL ".join(
-        f"SELECT doc_id, {j} AS band_idx, (sig_{2 * j} * 31 + sig_{2 * j + 1}) % {P_HASH} AS band_val FROM sig"
-        for j in range(MINHASH_BANDS)
-    )
     verified = _duck_minhash_cte().strip()
     assert verified.startswith("WITH ")
     verified = ", " + verified[len("WITH ") :] + f"""
-    , bands AS ({bands_union}),
+    , bands AS ({_duck_bands()}),
     kept AS (
       SELECT band_idx, band_val FROM bands
       GROUP BY band_idx, band_val HAVING count(*) BETWEEN 2 AND 64
@@ -220,17 +216,17 @@ def q_pipeline_pretrain(
         # discipline and ~n²/2¹²⁹ class as the exact-dedup key above; a
         # spurious train-gram/eval-gram collision now needs both seeds
         # to collide at once. Measured ≤3% (OPTIMIZATION_r12.md §1).
-        grams = F.array_distinct(
-            F.expr(
-                "transform(sequence(1, size(toks) - 2),"
-                " i -> struct(xxhash64(toks[i-1], toks[i], toks[i+1]) AS g1,"
-                "             xxhash64(1, toks[i-1], toks[i], toks[i+1]) AS g2))"
-            )
+        # Docs with < 3 tokens get an empty gram array (explode drops
+        # them): a scan-local CASE, not a row filter, which the optimizer
+        # would push below the projection and so tokenize twice.
+        grams = F.expr(
+            "CASE WHEN size(toks) >= 3 THEN array_distinct(transform("
+            "sequence(1, size(toks) - 2),"
+            " i -> struct(xxhash64(toks[i-1], toks[i], toks[i+1]) AS g1,"
+            "             xxhash64(1, toks[i-1], toks[i], toks[i+1]) AS g2)))"
+            " ELSE array() END"
         )
-        return (
-            df.filter(F.size("toks") >= 3)
-            .select("doc_id", F.explode(grams).alias("g"))
-        )
+        return df.select("doc_id", F.explode(grams).alias("g"))
 
     eval_sh = shingle_rows(d.filter(F.col("doc_id") % 100 == 0))
     contaminated = (

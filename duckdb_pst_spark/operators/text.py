@@ -1261,14 +1261,15 @@ def q_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
 
         from duckdb_pst_spark.functions.batches import rebatch
-        from duckdb_pst_spark.functions.polyhash_np import batch_shingle_hashes
+        from duckdb_pst_spark.functions.polyhash_np import SpanHasher
 
         shift = _WIN_SHIFT
         w = _WIN_W
         pad = np.iinfo(np.int64).max
 
+        hasher = SpanHasher()
         for pdf in rebatch(batches, 4096):
-            ids, nsh_arr, didx, pos, h = batch_shingle_hashes(
+            ids, nsh_arr, didx, pos, h = hasher.spans(
                 pdf["text"].values, pdf["doc_id"].values
             )
             if not len(ids):

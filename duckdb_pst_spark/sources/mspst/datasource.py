@@ -347,10 +347,11 @@ class PstReader(DataSourceReader):
         """Bind-time planning (A3/A4, table_function.cpp:191-239) over
         the expanded glob: see ``plan``. Paths may be local globs or
         remote URLs — http(s) range reads / pyarrow filesystems (A2,
-        duckdb_filesystem.cpp:12-36)."""
-        from duckdb_pst_spark.sources.mspst.fsio import expand_paths
+        duckdb_filesystem.cpp:12-36). A missing literal local path
+        raises ``FileNotFoundError``; an unmatched glob plans nothing."""
+        from duckdb_pst_spark.sources.mspst.fsio import expand_batch_paths
 
-        return self.plan(expand_paths(self.path) if self.path else [])
+        return self.plan(expand_batch_paths(self.path) if self.path else [])
 
     def plan(self, files: list[str]) -> list[InputPartition]:
         """Byte-balanced scan partitions over an explicit file list.

@@ -187,3 +187,15 @@ def expand_paths(path: str) -> list[str]:
     # rebuild URIs: for bucket-rooted stores (s3/gs) fi.path carries the
     # bucket, so scheme:// + path round-trips
     return [f"{scheme}://{p}" for p in names]
+
+
+def expand_batch_paths(path: str) -> list[str]:
+    """``expand_paths`` for a batch read. As with Spark's file sources, a
+    local or ``file://`` path with no glob characters that does not
+    exist raises ``FileNotFoundError``; an unmatched glob stays empty
+    (the reference skips what it cannot read, A18)."""
+    files = expand_paths(path)
+    literal = not any(c in path for c in "*?[")
+    if not files and literal and split_scheme(path) in (None, "file"):
+        raise FileNotFoundError(f"PST path does not exist: {path}")
+    return files

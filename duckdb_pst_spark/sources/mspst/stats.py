@@ -139,11 +139,12 @@ def pst_count(spark, path: str, table: str = "messages") -> int:
     Walks btree pages, never message rows — the COLUMN_DATA_SCAN analog.
     Small corpora count in-process (forked pool, like the reference's
     bind-time planning threads); large corpora run one Spark task per
-    run of files so the crawl scales with the cluster.
+    run of files so the crawl scales with the cluster. A missing literal
+    local path raises ``FileNotFoundError``; an unmatched glob counts 0.
     """
-    from duckdb_pst_spark.sources.mspst.fsio import expand_paths
+    from duckdb_pst_spark.sources.mspst.fsio import expand_batch_paths
 
-    files = expand_paths(path)
+    files = expand_batch_paths(path)
     if not files:
         return 0
     if len(files) == 1:

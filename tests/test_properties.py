@@ -141,42 +141,122 @@ def test_treewalk_empty_edges(spark, dedup_level):
     assert got == {5}
 
 
-# --------------------------------------------------- minhash kernel math
-@given(
-    toks=st.lists(
-        st.text(
-            alphabet=st.characters(min_codepoint=33, max_codepoint=1000), min_size=1, max_size=12
-        ),
-        min_size=3,
-        max_size=40,
-    )
+# --------------------------------------------------- poly-hash kernel math
+def _fold(s: str) -> int:
+    """The portable poly-hash, written as the per-character fold."""
+    h = 0
+    for ch in s:
+        h = (h * 31 + ord(ch)) % P_HASH
+    return h
+
+
+def _expected_spans(texts, n):
+    """[(doc index, 1-based position, hash)] of every n-token span."""
+    out = []
+    for i, text in enumerate(texts):
+        toks = [] if text is None else [t for t in text.split(" ") if t]
+        out += [(i, j + 1, _fold(" ".join(toks[j : j + n]))) for j in range(len(toks) - n + 1)]
+    return out
+
+
+def _group(spans):
+    """{doc index: [hash, ...]} in span order."""
+    out: dict[int, list[int]] = {}
+    for d, _pos, h in spans:
+        out.setdefault(d, []).append(h)
+    return out
+
+
+def _check_span_hashes(hasher, texts):
+    import numpy as np
+
+    for n in (1, 3):
+        kept, nsp, didx, pos, h = hasher.spans(texts, np.arange(len(texts)) + 100, n)
+        got = [(int(kept[d]) - 100, int(p), int(v)) for d, p, v in zip(didx, pos, h)]
+        assert got == _expected_spans(texts, n)
+        assert nsp.tolist() == np.bincount(didx, minlength=len(kept)).tolist()
+
+
+_TOKEN = st.text(
+    alphabet=st.characters(min_codepoint=33, max_codepoint=1000), min_size=1, max_size=12
 )
+_DOC = st.one_of(
+    st.none(),
+    st.just(""),
+    st.lists(_TOKEN, min_size=1, max_size=2).map(" ".join),
+    # "" items become runs of spaces, also leading and trailing ones
+    st.lists(st.one_of(_TOKEN, st.just("")), min_size=1, max_size=40).map(" ".join),
+)
+
+
+@given(texts=st.lists(_DOC, min_size=1, max_size=8))
 @settings(max_examples=200, deadline=None)
-def test_prefix_scan_shingle_hashes_match_direct_fold(toks):
-    """The Arrow kernel's modular prefix-scan (segment-difference) shingle
-    hashes must equal the direct (acc*31 + ord) % P character fold the
-    JVM/oracle twins compute — pure math check, no Spark. Includes
-    non-ASCII codepoints to exercise the ord() fallback path."""
+def test_prefix_scan_shingle_hashes_match_direct_fold(texts):
+    """The shared poly-hash engine and the two batch kernels built on it
+    equal their definitions over the direct (acc*31 + ord) % P character
+    fold the JVM/oracle twins compute — pure math, no Spark. Each
+    example is a batch mixing NULL, empty, 1–2-token and longer
+    documents (runs of spaces, non-ASCII codepoints), so span
+    boundaries cross documents of every kind:
+
+    - engine spans at n=1 (tokens) and n=3 (shingles);
+    - MinHash bands: sig_k = min over distinct shingle hashes h of
+      (a_k·h + b_k) mod P, band_j = (sig_2j·31 + sig_2j+1) mod P, one
+      row per band for each document with ≥ 3 tokens;
+    - SimHash: h1 = token hash, h2 = h1·2654435761 mod P; bit i of s
+      is set when more tokens have bit i of (h1 bits 0–29, h2 bits
+      30–59) set than clear; one row per document with ≥ 1 token."""
     import pandas as pd
 
-    from duckdb_pst_spark.operators.dedup import _minhash_band_kernel, _A, _B, MINHASH_BANDS
+    from duckdb_pst_spark.functions.polyhash_np import SpanHasher
+    from duckdb_pst_spark.operators.dedup import (
+        MINHASH_BANDS,
+        _A,
+        _B,
+        _minhash_band_kernel,
+        _simhash_prod_kernel,
+    )
 
-    def ph(s: str) -> int:
-        h = 0
-        for ch in s:
-            h = (h * 31 + ord(ch)) % P_HASH
-        return h
+    _check_span_hashes(SpanHasher(), texts)
+    pdf = pd.DataFrame({"doc_id": list(range(len(texts))), "text": texts})
 
-    sh = sorted({ph(" ".join(toks[i : i + 3])) for i in range(len(toks) - 2)})
-    sigs = [min((_A[k] * h + _B[k]) % P_HASH for h in sh) for k in range(len(_A))]
-    expect = {
-        (j, (sigs[2 * j] * 31 + sigs[2 * j + 1]) % P_HASH) for j in range(MINHASH_BANDS)
-    }
-
-    pdf = pd.DataFrame({"doc_id": [7], "text": [" ".join(toks)]})
+    expect_bands = set()
+    for d, hs in _group(_expected_spans(texts, 3)).items():
+        sigs = [min((a * h + b) % P_HASH for h in set(hs)) for a, b in zip(_A, _B)]
+        expect_bands |= {
+            (d, j, (sigs[2 * j] * 31 + sigs[2 * j + 1]) % P_HASH) for j in range(MINHASH_BANDS)
+        }
     out = pd.concat(list(_minhash_band_kernel(iter([pdf]))))
-    got = {(int(r.band_idx), int(r.band_val)) for r in out.itertuples()}
-    assert got == expect
+    got = [(int(r.doc_id), int(r.band_idx), int(r.band_val)) for r in out.itertuples()]
+    assert len(got) == len(expect_bands) and set(got) == expect_bands
+
+    expect_sim = {}
+    for d, h1 in _group(_expected_spans(texts, 1)).items():
+        h2 = [h * 2654435761 % P_HASH for h in h1]
+        s = 0
+        for bit in range(60):
+            vote = sum(1 if (v >> (bit % 30)) & 1 else -1 for v in (h1 if bit < 30 else h2))
+            s |= (vote > 0) << bit
+        expect_sim[d] = s
+    out = pd.concat(list(_simhash_prod_kernel(iter([pdf]))))
+    assert {int(r.doc_id): int(r.s) for r in out.itertuples()} == expect_sim
+    assert len(out) == len(expect_sim)
+
+
+def test_poly_hash_power_table_grows_across_batches():
+    """One hasher keeps its power tables across batches: a batch whose
+    document is longer than any before it must grow them, and the
+    hashes of both batches (and of the short batch again) stay exact."""
+    from duckdb_pst_spark.functions.polyhash_np import SpanHasher
+
+    hasher = SpanHasher()
+    short = ["ab cd ef gh", None, "x"]
+    _check_span_hashes(hasher, short)
+    size = len(hasher.pw)
+    long_doc = " ".join(f"t{i}" for i in range(size + 2000))  # several doublings
+    _check_span_hashes(hasher, ["a b c", long_doc, "d e"])
+    assert size < len(long_doc) < len(hasher.pw) == len(hasher.ipw)
+    _check_span_hashes(hasher, short)
 
 
 def _model_components(edges: list[tuple[int, int]]) -> dict[int, int]:

@@ -7,6 +7,7 @@ writer's manifest, so no golden archive is needed."""
 from __future__ import annotations
 
 import os
+import re
 import shutil
 
 import pytest
@@ -58,11 +59,29 @@ def test_glob_scan_covers_all_files(corpus, scan):
     assert scan(d / one["file"]).count() == one["messages"]
 
 
-@pytest.mark.parametrize("bad", ["fixtures/nope*.pst", "no/such.pst"])
+@pytest.mark.parametrize("bad", ["fixtures/nope*.pst"])
 def test_empty_glob_is_empty_not_error(corpus, scan, bad):
     """Unmatched glob → empty result (the reference skips bad files, A18)."""
     d, _m = corpus
     assert scan(d / bad).count() == 0
+
+
+def test_missing_literal_path_raises(spark, corpus, scan):
+    """A literal path that does not exist is an error, not an empty
+    table (Spark's file sources raise PATH_NOT_FOUND), on the scan and
+    on the planning-only count and scan info."""
+    from duckdb_pst_spark.sources.mspst.stats import pst_count, pst_scan_info
+
+    d, _m = corpus
+    missing = str(d / "no" / "such.pst")
+    with pytest.raises(Exception, match=re.escape(f"PST path does not exist: {missing}")):
+        scan(missing).count()
+    with pytest.raises(FileNotFoundError, match=re.escape(missing)):
+        pst_count(spark, missing)
+    with pytest.raises(FileNotFoundError, match=re.escape(missing)):
+        pst_count(spark, f"file://{missing}")
+    with pytest.raises(FileNotFoundError, match=re.escape(missing)):
+        pst_scan_info(spark, missing)
 
 
 def test_class_filtered_readers(corpus, scan):
